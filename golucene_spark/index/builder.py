@@ -1048,6 +1048,10 @@ class LogicalIndex:
             .agg(F.count("*").alias("df"), F.sum("freq").alias("ttf"))
         )
 
+    def lookup_term_stats(self, field: str, terms: list[str]) -> dict[str, dict]:
+        return {r["term"]: {"df": r["df"], "ttf": r["ttf"]}
+                for r in self.term_stats(field, terms).collect()}
+
     def cache(self):
         self._tf_all = self._tf_all.persist()
         return self
@@ -1094,6 +1098,34 @@ def dead_segments(index_dir: str) -> set[int]:
     return dead
 
 
+def _arrow_dataset(path: str):
+    """pyarrow dataset over a Spark-written parquet directory, its files
+    listed once, here.  The schema is the UNION of the files' schemas
+    (what Spark's mergeSchema resolves): a column absent from some chunk
+    reads as null in that chunk's rows."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    d = ds.dataset(path, format="parquet")
+    return d.replace_schema(
+        pa.unify_schemas([f.physical_schema for f in d.get_fragments()])
+    )
+
+
+def read_field_stats(index_dir: str) -> dict[str, dict]:
+    """{field: field_stats row} read on the driver (the table is one
+    tiny file; a Spark collect of it costs two orders of magnitude
+    more)."""
+    rows = _arrow_dataset(os.path.join(index_dir, "field_stats")).to_table().to_pylist()
+    return {r["field"]: r for r in rows}
+
+
+# term_dict block-metadata spread columns and how term stats fold them
+# across segments (WAND's degenerate-bounds early-out reads the result)
+_SPREAD_AGGS = (("bmf_min", "min"), ("bmf_max", "max"),
+                ("bdlq_min", "min"), ("bdlq_max", "max"))
+
+
 class MaterializedIndex:
     """Reader over an index built by IndexBuilder (term-pruned scans).
     Reads the LIVE segment set: segments superseded by merges (manifest
@@ -1116,6 +1148,10 @@ class MaterializedIndex:
         )
         self.doc_stats = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
         self.doc_meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
+        # driver-side terms index (the .tip/.tim seek role): the same
+        # term_dict files, listed once at open — this listing IS the
+        # snapshot, like spark.read.parquet's listing above
+        self._term_dict_ds = _arrow_dataset(os.path.join(index_dir, "term_dict"))
         self._dead = sorted(int(x) for x in dead_segments(index_dir))
         if self._dead:
             alive = lambda df: df.filter(~F.col("segment_id").isin(self._dead))
@@ -1163,10 +1199,7 @@ class MaterializedIndex:
                     ranges_ok = False
         self._prune_files = ranges_ok and bool(self._term_ranges)
         self.last_prune_stats: tuple | None = None
-        self._field_stats = {
-            r["field"]: r.asDict()
-            for r in spark.read.parquet(os.path.join(index_dir, "field_stats")).collect()
-        }
+        self._field_stats = read_field_stats(index_dir)
 
     def postings_frame(self, field: str, terms: list[str]) -> DataFrame:
         """Block-level posting rows for the given terms, reading ONLY
@@ -1226,14 +1259,38 @@ class MaterializedIndex:
             out = filter_live(out, self._tombstones)
         return out.drop("segment_id")
 
-    def term_stats(self, field: str, terms: list[str]) -> DataFrame:
-        # block-metadata spread columns (when the index carries them) ride
-        # the same collect so WAND's degenerate-bounds early-out is free
-        spread = (
-            [F.min("bmf_min").alias("bmf_min"), F.max("bmf_max").alias("bmf_max"),
-             F.min("bdlq_min").alias("bdlq_min"), F.max("bdlq_max").alias("bdlq_max")]
-            if "bmf_min" in self.term_dict.columns else []
+    def lookup_term_stats(self, field: str, terms: list[str]) -> dict[str, dict]:
+        """TermContext seek (core/index/terms.go:60-120) on the driver:
+        {term: {df, ttf[, bmf_min, bmf_max, bdlq_min, bdlq_max]}} for the
+        terms the snapshot holds, summed over live segments.  A vectorized
+        read of the term_dict files listed at open: the (field, term)
+        predicate prunes row groups of the (field, term)-sorted chunks,
+        and Arrow's group_by folds the per-segment rows.  No Spark job;
+        the same rows as ``term_stats(field, terms).collect()``."""
+        import pyarrow.compute as pc
+
+        if not terms:
+            return {}
+        flt = (pc.field("field") == field) & pc.field("term").isin(list(terms))
+        if self._dead:
+            flt &= ~pc.field("segment_id").isin(self._dead)
+        names = self._term_dict_ds.schema.names
+        aggs = [("df", "sum"), ("ttf", "sum")] + [
+            a for a in _SPREAD_AGGS if a[0] in names
+        ]
+        rows = (
+            self._term_dict_ds.to_table(columns=["term", *(c for c, _ in aggs)], filter=flt)
+            .group_by("term").aggregate(aggs).to_pylist()
         )
+        return {r["term"]: {c: r[f"{c}_{fn}"] for c, fn in aggs} for r in rows}
+
+    def term_stats(self, field: str, terms: list[str]) -> DataFrame:
+        # the Spark twin of lookup_term_stats (gates and the driver
+        # contract read it as a DataFrame)
+        spread = [
+            getattr(F, fn)(c).alias(c)
+            for c, fn in _SPREAD_AGGS if c in self.term_dict.columns
+        ]
         return (
             self.term_dict.filter((F.col("field") == field) & F.col("term").isin(terms))
             .groupBy("term")

@@ -62,6 +62,15 @@ class MultiIndex:
         u = self._union([ix.term_stats(field, terms) for ix in self.indexes])
         return u.groupBy("term").agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
 
+    def lookup_term_stats(self, field: str, terms: list[str]) -> dict[str, dict]:
+        out: dict[str, dict] = {}
+        for ix in self.indexes:
+            for t, r in ix.lookup_term_stats(field, terms).items():
+                o = out.setdefault(t, {"df": 0, "ttf": 0})
+                o["df"] += int(r["df"])
+                o["ttf"] += int(r["ttf"])
+        return out
+
     def collection_stats_row(self, field: str) -> dict:
         if field not in self._cstats:
             max_doc = doc_count = sum_ttf = 0

@@ -3,8 +3,9 @@
 Reference trace (SURVEY §3.2/3.3) -> Spark shape:
 
   CreateNormalizedWeight (search.go:154-171)
-      -> one tiny collected term-stats lookup (TermContext analogue,
-         core/index/terms.go:60-120) + Python scalar weights
+      -> a driver-side term-stats seek (TermContext analogue,
+         core/index/terms.go:60-120): a vectorized Arrow read of the
+         snapshot's term_dict files, no Spark job + Python scalar weights
   TermScorer (terms.go:184-233)
       -> postings filter (term-pruned scan) + score column
   BooleanScorer bucket table (booleanScorer.go:114-210)
@@ -157,8 +158,8 @@ class Searcher:
         # under one open index — deletes don't decrement df until merge,
         # exactly the reference's semantics), so the memo lives ON the
         # index object and is shared by every Searcher over it: a fresh
-        # Searcher per query — the normal serving pattern — pays the
-        # term_dict collect only for terms the index hasn't seen yet.
+        # Searcher per query — the normal serving pattern — seeks
+        # term_dict only for terms the index hasn't seen yet.
         self._cstats_cache = getattr(index, "_cstats_shared", None)
         if self._cstats_cache is None:
             self._cstats_cache = index._cstats_shared = {}
@@ -208,25 +209,31 @@ class Searcher:
         return self._cstats_cache[field]
 
     def _term_stats(self, query) -> dict[tuple, _TermStats]:
-        # memoized per searcher: a Searcher wraps one index snapshot, so
-        # (field, term) stats never change under it.  Repeated queries
-        # (and wand_topk's early-out falling back to search()) pay the
-        # term_dict collect once instead of once per execution.
-        terms = _collect_terms(query, set())
-        missing = [(f, t) for f, t in terms if (f, t) not in self._tstats_cache]
+        return self._seek_terms(_collect_terms(query, set()))
+
+    def _seek_terms(self, terms) -> dict[tuple, _TermStats]:
+        """{(field, term): _TermStats} through the snapshot memo: (field,
+        term) stats never change under one open index, so repeated
+        queries (and wand_topk's early-out falling back to search())
+        seek each term once.  Misses are published only after the seek
+        returns: a concurrent Searcher never reads a half-filled entry,
+        and a failed seek caches nothing."""
         by_field: dict[str, list[str]] = {}
-        for f, t in missing:
-            by_field.setdefault(f, []).append(t)
-            self._tstats_cache[(f, t)] = _TermStats()
+        for f, t in terms:
+            if (f, t) not in self._tstats_cache:
+                by_field.setdefault(f, []).append(t)
+        found: dict[tuple, _TermStats] = {}
         for f, ts in by_field.items():
-            for r in self.index.term_stats(f, ts).collect():
-                d = r.asDict()
-                self._tstats_cache[(f, r["term"])] = _TermStats(
-                    int(r["df"]), int(r["ttf"]),
+            hits = self.index.lookup_term_stats(f, ts)
+            for t in ts:
+                d = hits.get(t)
+                found[(f, t)] = _TermStats() if d is None else _TermStats(
+                    int(d["df"]), int(d["ttf"]),
                     d.get("bmf_min"), d.get("bmf_max"),
                     d.get("bdlq_min"), d.get("bdlq_max"),
                 )
-        return {(f, t): self._tstats_cache[(f, t)] for f, t in terms}
+        self._tstats_cache.update(found)
+        return {k: found[k] if k in found else self._tstats_cache[k] for k in terms}
 
     def _term_scalar(self, st, cs) -> float:
         """Per-term scoring scalar: idf for BM25/classic, the Dirichlet

@@ -10,8 +10,9 @@ tf * idf with the classic idf = ln(maxDoc/(df+1)) + 1
 determinism), then search a SHOULD-of-TermQuery boolean.
 
 Scale shape: the probe text is ONE document — tf is computed driver-
-side; the only cluster work is a term-pruned df lookup (term_stats)
-plus the normal boolean query.
+side and df comes from the searcher's term-stats seek (a driver-side
+read of term_dict on a MaterializedIndex); the only cluster work is
+the normal boolean query.
 """
 
 from __future__ import annotations
@@ -44,13 +45,10 @@ def interesting_terms(
     if not cand:
         return []
     cs = searcher._collection_stats(field)
-    df_map = {
-        r["term"]: int(r["df"])
-        for r in searcher.index.term_stats(field, cand).collect()
-    }
+    stats = searcher._seek_terms({(field, t) for t in cand})
     out = []
     for t in cand:
-        df = df_map.get(t, 0)
+        df = stats[(field, t)].df
         if df < min_doc_freq:
             continue
         idf = math.log(cs["max_doc"] / (df + 1.0)) + 1.0

@@ -554,14 +554,11 @@ def common_terms_query(searcher, field: str, terms: list[str],
     stopword-free way to keep hot terms from drowning the scoring.
     Returns the composed BooleanQuery (executes through the normal
     flat-OR single-scan plan; the df split costs one memoized
-    term-stats lookup, no extra Spark jobs when warm)."""
+    term-stats seek — a driver-side term_dict read on a
+    MaterializedIndex, no Spark job)."""
     from .ast import BooleanClause, BooleanQuery, Occur, TermQuery as TQ
 
-    stats = searcher._term_stats(
-        BooleanQuery(tuple(
-            BooleanClause(TQ(field, t), Occur.SHOULD) for t in terms
-        ))
-    )
+    stats = searcher._seek_terms({(field, t) for t in terms})
     max_doc = searcher._collection_stats(field)["max_doc"]
     cutoff = max_term_frequency * max_doc
     clauses = []

@@ -23,7 +23,7 @@ exact algorithm:
 The pipeline is two driver actions — one metadata-only collect of the
 surviving block spans (no posting decode), one exact rescore whose
 doc-id interval filter pushes into the scan.  A degenerate-bounds early-out (block
-metadata spread riding the term_dict stats collect) falls back to the
+metadata spread riding the driver-side term-stats seek) falls back to the
 single-job exhaustive plan when block ubs cannot separate (uniform
 corpora), so WAND never pays its overhead where pruning is impossible.
 
@@ -130,11 +130,12 @@ def wand_topk(searcher: Searcher, query, k: int = 10,
         return searcher.search(q, k)
 
     # degenerate-bounds early-out (zero extra jobs): the term_dict rows
-    # already collected above carry each term's block-metadata spread
-    # (min/max of block_max_freq, block_min_dlq).  When every block's
-    # upper bound sits within a few percent of the term's max, the
-    # threshold can never separate blocks and WAND would pay its full
-    # overhead to prune nothing — run the single-job exhaustive plan.
+    # already read by the term-stats seek above carry each term's
+    # block-metadata spread (min/max of block_max_freq, block_min_dlq).
+    # When every block's upper bound sits within a few percent of the
+    # term's max, the threshold can never separate blocks and WAND would
+    # pay its full overhead to prune nothing — run the single-job
+    # exhaustive plan.
     def _ub(w, f, d):
         f = float(f)
         return w * (k1 + 1.0) * f / (f + k1 * (1.0 - b + b * float(d) / avgdl))

@@ -23,6 +23,7 @@ from ..index.builder import (
     CorpusSpec,
     IndexBuilder,
     blocked_postings,
+    read_field_stats,
     tokenize_tf,
 )
 
@@ -199,7 +200,7 @@ def _refresh_field_stats(spark, index_dir, batch_fs: dict, n_new_docs: int,
 
         refresh_field_stats(spark, index_dir)
         return
-    old = {r["field"]: r.asDict() for r in spark.read.parquet(fs_path).collect()}
+    old = read_field_stats(index_dir)
     max_doc = max((int(v["max_doc"]) for v in old.values()), default=0) + n_new_docs
     fields = set(old) | set(batch_fs)
     rows = []
