@@ -45,6 +45,7 @@ from dataclasses import dataclass, field as dc_field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -961,6 +962,7 @@ class IndexBuilder:
                     "block_size": self.block_size,
                     "salt_range": self.salt_range,
                     "wand_layout": self.wand_layout,
+                    "omit_norms_fields": sorted(_omit_norms(self.spec)),
                     "num_segments": nseg,
                     "num_chunks": num_chunks,
                     "wall_sec": round(time.time() - t0, 3),
@@ -970,36 +972,17 @@ class IndexBuilder:
             metrics["chunks_built"] += 1
             metrics["docs"] += n_docs
 
-        # collection statistics (search.go:192-226), one tiny job
+        # collection statistics (search.go:192-226): one tiny aggregate
         t_fs = time.time()
-        ds_all = self.spark.read.parquet(os.path.join(index_dir, "doc_stats"))
-        td_all = self.spark.read.parquet(os.path.join(index_dir, "term_dict"))
-        fs = (
-            ds_all.groupBy("field")
-            .agg(
-                F.count("*").alias("doc_count"),
-                F.sum("length").alias("sum_ttf_exact"),
-            )
-            .join(
-                td_all.groupBy("field").agg(
-                    F.sum("ttf").alias("sum_ttf"), F.sum("df").alias("sum_df")
-                ),
-                "field",
-                "left",
-            )
-            .withColumn("max_doc", F.lit(metrics["docs"]).cast("long"))
+        write_field_stats(
+            index_dir,
+            field_stats_rows(
+                self.spark.read.parquet(os.path.join(index_dir, "doc_stats")),
+                self.spark.read.parquet(os.path.join(index_dir, "term_dict")),
+                metrics["docs"],
+            ),
+            _omit_norms(self.spec),
         )
-        omit = [f.name for f in self.spec.text_fields if getattr(f, "omit_norms", False)]
-        if omit:
-            # omitNorms fields read as sum_ttf=0, so the scorer degrades
-            # to the no-norms denominator (same path as keyword fields)
-            fs = fs.withColumn(
-                "sum_ttf",
-                F.when(F.col("field").isin(omit), F.lit(0).cast("long")).otherwise(
-                    F.col("sum_ttf")
-                ),
-            )
-        fs.coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "field_stats"))
         metrics["field_stats_sec"] = round(time.time() - t_fs, 3)
         return metrics
 
@@ -1118,6 +1101,85 @@ def read_field_stats(index_dir: str) -> dict[str, dict]:
     more)."""
     rows = _arrow_dataset(os.path.join(index_dir, "field_stats")).to_table().to_pylist()
     return {r["field"]: r for r in rows}
+
+
+# the field_stats table: one row per field, one file
+FS_SCHEMA = pa.schema([
+    ("field", pa.string()), ("doc_count", pa.int64()), ("sum_ttf_exact", pa.int64()),
+    ("sum_ttf", pa.int64()), ("sum_df", pa.int64()), ("max_doc", pa.int64()),
+])
+FIELD_STATS_FILE = "part-0.parquet"
+
+
+def _omit_norms(spec) -> set[str]:
+    return {f.name for f in spec.text_fields if getattr(f, "omit_norms", False)}
+
+
+def omit_norms_fields(index_dir: str) -> set[str]:
+    """The omitNorms fields the manifest's build/NRT records declare
+    (a merge has no spec to read them from)."""
+    out: set[str] = set()
+    mdir = os.path.join(index_dir, "manifest")
+    if os.path.isdir(mdir):
+        for fn in os.listdir(mdir):
+            if fn.endswith(".json"):
+                with open(os.path.join(mdir, fn)) as f:
+                    out.update(json.load(f).get("omit_norms_fields", ()))
+    return out
+
+
+def field_stats_rows(doc_stats: DataFrame, term_dict: DataFrame, max_doc: int) -> list[dict]:
+    """Per-field collection stats of the given doc_stats/term_dict rows,
+    collected (at most one row per field): fields with doc_stats rows,
+    with null sum_ttf/sum_df where term_dict has none.  One aggregate
+    over the union of both tables: a join of two per-field aggregates
+    broadcasts a 16 MB hash relation for a few rows, and the collected
+    frame keeps it in the driver heap until Python's cyclic GC frees
+    the frame (py4j holds JVM objects in reference cycles)."""
+    null = F.lit(None).cast("long")
+    fs = doc_stats.select(
+        "field", F.lit(1).alias("doc"), F.col("length").cast("long").alias("length"),
+        null.alias("ttf"), null.alias("df"),
+    ).unionByName(term_dict.select(
+        "field", F.lit(None).cast("int").alias("doc"), null.alias("length"),
+        F.col("ttf").cast("long").alias("ttf"), F.col("df").cast("long").alias("df"),
+    )).groupBy("field").agg(
+        F.count("doc").alias("doc_count"), F.sum("length").alias("sum_ttf_exact"),
+        F.sum("ttf").alias("sum_ttf"), F.sum("df").alias("sum_df"),
+    )
+    return [{**r.asDict(), "max_doc": max_doc} for r in fs.collect() if r["doc_count"]]
+
+
+def write_field_stats(index_dir: str, rows: list[dict], omit_norms: set[str]) -> None:
+    """Commit the field_stats table from the driver: one Arrow file,
+    written under a hidden name and renamed onto FIELD_STATS_FILE, so a
+    reader never sees a partial table.  Fields in ``omit_norms`` store
+    sum_ttf = 0, so the scorer degrades to the no-norms denominator
+    (the same path as keyword fields).  Files an older Spark writer left
+    in the directory (part files, _SUCCESS, .crc, a crashed job's
+    _temporary/) are removed after the rename."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    d = os.path.join(index_dir, "field_stats")
+    os.makedirs(d, exist_ok=True)
+    rows = sorted(
+        ({**r, "sum_ttf": 0} if r["field"] in omit_norms else r for r in rows),
+        key=lambda r: r["field"],
+    )
+    tmp = os.path.join(d, f".{FIELD_STATS_FILE}.tmp")
+    # no Arrow schema blob or column statistics: a one-row-per-field
+    # table is never pruned, and the two would double the file
+    pq.write_table(pa.Table.from_pylist(rows, schema=FS_SCHEMA), tmp,
+                   store_schema=False, write_statistics=False)
+    os.replace(tmp, os.path.join(d, FIELD_STATS_FILE))
+    for fn in os.listdir(d):
+        path = os.path.join(d, fn)
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        elif fn != FIELD_STATS_FILE:
+            os.remove(path)
 
 
 # term_dict block-metadata spread columns and how term stats fold them

@@ -7,6 +7,11 @@ append-only tombstones table; readers anti-join posting rows against
 it.  Faithful to Lucene's visibility semantics: collection statistics
 (maxDoc, df, ttf) still count deleted docs until a merge/expunge
 rewrites the segments — exactly numDocs vs maxDoc in Lucene.
+
+A delete's ids already sit on the driver (the caller's list, a flushed
+chunk's doc_meta, a collected delete-by-query match set), so each
+tombstone generation is one small parquet file written with Arrow on
+the driver: ``delete_docs`` starts no Spark job.
 """
 
 from __future__ import annotations
@@ -24,8 +29,7 @@ def _tombstone_dir(index_dir: str) -> str:
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> dict:
     """Tombstone explicit doc ids (delete-by-id)."""
-    df = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
-    return _append_tombstones(spark, index_dir, df, {"kind": "ids", "n": len(doc_ids)})
+    return _append_tombstones(index_dir, doc_ids, {"kind": "ids"})
 
 
 def delete_by_query(spark: SparkSession, index_dir: str, query, searcher=None) -> dict:
@@ -39,35 +43,48 @@ def delete_by_query(spark: SparkSession, index_dir: str, query, searcher=None) -
         from ..search.parser import parse_query
 
         query = parse_query(query)
-    matches = s.score_frame(query).select("doc_id").distinct()
-    n = matches.count()
-    return _append_tombstones(spark, index_dir, matches, {"kind": "query", "n": n})
+    ids = [r["doc_id"] for r in s.score_frame(query).select("doc_id").distinct().collect()]
+    return _append_tombstones(index_dir, ids, {"kind": "query"})
 
 
-def _append_tombstones(spark, index_dir, df: DataFrame, info: dict,
+def _append_tombstones(index_dir: str, doc_ids, info: dict,
                        before_segment: int | None = None) -> dict:
+    """Commit one tombstone generation: ``gen=<g>/part-0.parquet``
+    (doc_id, before_segment), written under a hidden name and renamed,
+    so a reader listing tombstones/ never sees a partial file.  The
+    manifest record's ``n`` counts the distinct ids."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tdir = _tombstone_dir(index_dir)
+    os.makedirs(tdir, exist_ok=True)
+    # the generation names both the data directory and the manifest
+    # record: reserve one no other delete holds (mkdir is atomic), else
+    # two deletes in the same millisecond would overwrite each other
     gen = int(time.time() * 1000)
-    out = os.path.join(_tombstone_dir(index_dir), f"gen={gen}")
-    (df.select(F.col("doc_id").cast("long")).distinct()
-       .withColumn("before_segment",
-                   F.lit(before_segment).cast("long"))
-       .write.mode("overwrite").parquet(out))
-    if info.get("n") is None:
-        # row count from the just-written footers: no extra Spark job
-        # (update_documents used to pay a whole ids.count() action here)
-        import glob
-
-        import pyarrow.parquet as pq
-
-        info["n"] = sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(os.path.join(out, "*.parquet"))
-        )
+    while True:
+        out = os.path.join(tdir, f"gen={gen}")
+        try:
+            os.mkdir(out)
+            break
+        except FileExistsError:
+            gen += 1
+    ids = sorted({int(d) for d in doc_ids})
+    table = pa.table({
+        "doc_id": pa.array(ids, pa.int64()),
+        "before_segment": pa.array([before_segment] * len(ids), pa.int64()),
+    })
+    tmp = os.path.join(out, ".part-0.parquet.tmp")
+    pq.write_table(table, tmp, store_schema=False)
+    os.replace(tmp, os.path.join(out, "part-0.parquet"))
     mdir = os.path.join(index_dir, "manifest")
     os.makedirs(mdir, exist_ok=True)
-    rec = {"chunk": f"tombstones-{gen}", "status": "committed", "kind": "delete", **info}
-    with open(os.path.join(mdir, f"tombstones-{gen}.json"), "w") as f:
+    rec = {"chunk": f"tombstones-{gen}", "status": "committed", "kind": "delete",
+           "n": len(ids), **info}
+    tmp = os.path.join(mdir, f".tombstones-{gen}.json.tmp")
+    with open(tmp, "w") as f:
         json.dump(rec, f)
+    os.replace(tmp, os.path.join(mdir, f"tombstones-{gen}.json"))
     return rec
 
 
@@ -100,10 +117,13 @@ def tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
 
     origin = merged_origin_ranges(index_dir)
     if origin:
-        m = spark.createDataFrame(
-            [(int(k), int(v[1])) for k, v in origin.items()],
-            "m_seg long, m_maxorig long",
-        )
+        # a literal inline table: a createDataFrame(<list>) here would put
+        # a Python-worker RDD scan into every query plan on the index
+        m = spark.range(1).select(F.inline(F.array(*(
+            F.struct(F.lit(int(k)).cast("long").alias("m_seg"),
+                     F.lit(int(v[1])).cast("long").alias("m_maxorig"))
+            for k, v in origin.items()
+        ))))
         scoped = t.filter(F.col("before_segment").isNotNull())
         exact = scoped.join(
             F.broadcast(m), scoped["before_segment"] > m["m_maxorig"]
@@ -168,10 +188,14 @@ def update_documents(spark: SparkSession, index_dir: str, df: DataFrame,
     rec = incremental_index_batch(
         df, epoch, index_dir, spec, analyzer, quantize_norms, kind="update"
     )
-    ids = df.select(F.col(spec.id_col).cast("long").alias("doc_id"))
+    # the flushed chunk's doc_meta holds exactly the updated ids
+    from .builder import _arrow_dataset
+
+    ids = _arrow_dataset(
+        os.path.join(index_dir, "doc_meta", f"chunk={rec['chunk']}")
+    ).to_table(columns=["doc_id"]).column("doc_id").to_pylist()
     _append_tombstones(
-        spark, index_dir, ids,
-        {"kind": "delete", "reason": "update", "n": None},
+        index_dir, ids, {"kind": "delete", "reason": "update"},
         before_segment=rec["segment_id"],
     )
     return rec

@@ -459,8 +459,8 @@ def _merge_expunge(spark, index_dir, segment_ids, new_segment_id, out_chunk,
 
 def refresh_field_stats(spark: SparkSession, index_dir: str) -> None:
     """Recompute the collection-statistics table from the LIVE segment
-    set (post-merge/expunge)."""
-    from .builder import dead_segments
+    set (post-merge/expunge), with the manifest's omitNorms fields."""
+    from .builder import dead_segments, field_stats_rows, omit_norms_fields, write_field_stats
 
     ds = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
     td = spark.read.parquet(os.path.join(index_dir, "term_dict"))
@@ -468,18 +468,11 @@ def refresh_field_stats(spark: SparkSession, index_dir: str) -> None:
     if dead:
         alive = lambda df: df.filter(~F.col("segment_id").isin([int(x) for x in dead]))
         ds, td = alive(ds), alive(td)
-    max_doc = int(ds.select(F.countDistinct("doc_id")).collect()[0][0])
-    fs = (
-        ds.groupBy("field")
-        .agg(F.count("*").alias("doc_count"), F.sum("length").alias("sum_ttf_exact"))
-        .join(
-            td.groupBy("field").agg(F.sum("ttf").alias("sum_ttf"), F.sum("df").alias("sum_df")),
-            "field",
-            "left",
-        )
-        .withColumn("max_doc", F.lit(max_doc).cast("long"))
-    )
-    fs.coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "field_stats"))
+    # maxDoc counts every stored version: an updated doc's superseded
+    # copy stays in its segment (and in maxDoc) until an expunge drops
+    # it, as the NRT fold counts it
+    max_doc = int(ds.select(F.countDistinct("segment_id", "doc_id")).collect()[0][0])
+    write_field_stats(index_dir, field_stats_rows(ds, td, max_doc), omit_norms_fields(index_dir))
 
 
 def verify_index(spark: SparkSession, index_dir: str, source_df: DataFrame | None = None,

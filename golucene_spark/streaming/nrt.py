@@ -9,6 +9,12 @@ postings -> tables) and committed to the manifest; a MaterializedIndex
 reopened after any batch sees everything committed so far.  Exactly-once
 comes from foreachBatch epoch ids naming the chunk directories
 (idempotent overwrite per epoch).
+
+Spark writes only the chunk itself (postings, term_dict, doc_stats,
+doc_meta).  The commit's small tables start no Spark job: the batch's
+field-stat deltas are summed with Arrow from the chunk's own term_dict
+and doc_stats files, and the folded field_stats table is written with
+Arrow on the driver (``write_field_stats``).
 """
 
 from __future__ import annotations
@@ -22,9 +28,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..index.builder import (
     CorpusSpec,
     IndexBuilder,
+    _arrow_dataset,
+    _omit_norms,
     blocked_postings,
     read_field_stats,
     tokenize_tf,
+    write_field_stats,
 )
 
 
@@ -127,25 +136,26 @@ def incremental_index_batch(
         F.sha2(F.col(spec.text_fields[0].column), 256).alias("content_sha256"),
     ).write.mode("overwrite").parquet(os.path.join(index_dir, "doc_meta", f"chunk={chunk}"))
 
-    # this batch's per-field stat deltas — chunk-sized aggs, NOT a full
-    # doc_stats/term_dict scan per epoch (the manifest records carry the
-    # deltas; the global field_stats table is folded incrementally)
+    # this batch's per-field stat deltas, summed on the driver from the
+    # chunk's own just-written doc_stats/term_dict files (chunk-sized
+    # reads, no Spark job, NOT a full doc_stats/term_dict scan per
+    # epoch); the manifest records carry them and the global
+    # field_stats table is folded incrementally
+    def chunk_sums(table, aggs):
+        cols = sorted({"field", *(c for c, _ in aggs)})
+        t = _arrow_dataset(os.path.join(index_dir, table, f"chunk={chunk}")).to_table(columns=cols)
+        return {r["field"]: r for r in t.group_by("field").aggregate(aggs).to_pylist()}
+
+    term_sums = chunk_sums("term_dict", [("ttf", "sum"), ("df", "sum")])
     batch_fs: dict[str, dict] = {}
-    for r in ds.groupBy("field").agg(
-        F.count("*").alias("doc_count"), F.sum("length").alias("sum_ttf_exact")
-    ).collect():
-        batch_fs[r["field"]] = {
-            "doc_count": int(r["doc_count"]),
-            "sum_ttf_exact": int(r["sum_ttf_exact"] or 0),
-            "sum_ttf": 0,
-            "sum_df": 0,
+    for f, r in chunk_sums("doc_stats", [("length", "count"), ("length", "sum")]).items():
+        t = term_sums.get(f, {})
+        batch_fs[f] = {
+            "doc_count": int(r["length_count"]),
+            "sum_ttf_exact": int(r["length_sum"] or 0),
+            "sum_ttf": int(t.get("ttf_sum") or 0),
+            "sum_df": int(t.get("df_sum") or 0),
         }
-    for r in td.groupBy("field").agg(
-        F.sum("ttf").alias("sum_ttf"), F.sum("df").alias("sum_df")
-    ).collect():
-        if r["field"] in batch_fs:
-            batch_fs[r["field"]]["sum_ttf"] = int(r["sum_ttf"] or 0)
-            batch_fs[r["field"]]["sum_df"] = int(r["sum_df"] or 0)
 
     mdir = os.path.join(index_dir, "manifest")
     manifest_path = os.path.join(mdir, f"{chunk}.json")
@@ -154,6 +164,7 @@ def incremental_index_batch(
     # into field_stats — fall back to a full recompute in that rare case
     retry = os.path.exists(manifest_path)
     incremental = not retry and os.path.isdir(os.path.join(index_dir, "field_stats"))
+    omit_norms = _omit_norms(spec)
 
     rec = {
         "chunk": chunk,
@@ -163,6 +174,7 @@ def incremental_index_batch(
         "segment_id": seg_id,
         "n_docs": n,
         "quantize_norms": quantize_norms,
+        "omit_norms_fields": sorted(omit_norms),
         "field_stats": batch_fs,
         "stats_mode": "incremental" if incremental else "recompute",
         "wall_sec": round(time.time() - t0, 3),
@@ -173,7 +185,7 @@ def incremental_index_batch(
         json.dump(rec, f)
     os.replace(tmp, manifest_path)
 
-    _refresh_field_stats(spark, index_dir, batch_fs, n, full=not incremental)
+    _refresh_field_stats(spark, index_dir, batch_fs, n, omit_norms, full=not incremental)
     # keep the (optional) trigram side table fresh: delta-append this
     # chunk's terms so infix seeks never fall back to a full dictionary
     # scan on a living index (no-op when the index has no trigram table)
@@ -183,17 +195,12 @@ def incremental_index_batch(
     return rec
 
 
-FS_SCHEMA = (
-    "field string, doc_count long, sum_ttf_exact long, "
-    "sum_ttf long, sum_df long, max_doc long"
-)
-
-
 def _refresh_field_stats(spark, index_dir, batch_fs: dict, n_new_docs: int,
-                         full: bool = False) -> None:
+                         omit_norms: set[str], full: bool = False) -> None:
     """Fold one batch's per-field deltas into the (tiny) field_stats
-    table.  ``full=True`` (epoch retry, or no prior table) recomputes
-    from doc_stats/term_dict instead — the only case that scans them."""
+    table on the driver.  ``full=True`` (epoch retry, or no prior table)
+    recomputes from doc_stats/term_dict instead — the only case that
+    scans them."""
     fs_path = os.path.join(index_dir, "field_stats")
     if full or not os.path.isdir(fs_path):
         from ..index.merge import refresh_field_stats
@@ -202,20 +209,14 @@ def _refresh_field_stats(spark, index_dir, batch_fs: dict, n_new_docs: int,
         return
     old = read_field_stats(index_dir)
     max_doc = max((int(v["max_doc"]) for v in old.values()), default=0) + n_new_docs
-    fields = set(old) | set(batch_fs)
-    rows = []
-    for f in sorted(fields):
-        o = old.get(f, {})
-        d = batch_fs.get(f, {})
-        rows.append((
-            f,
-            int(o.get("doc_count") or 0) + int(d.get("doc_count") or 0),
-            int(o.get("sum_ttf_exact") or 0) + int(d.get("sum_ttf_exact") or 0),
-            int(o.get("sum_ttf") or 0) + int(d.get("sum_ttf") or 0),
-            int(o.get("sum_df") or 0) + int(d.get("sum_df") or 0),
-            max_doc,
-        ))
-    spark.createDataFrame(rows, FS_SCHEMA).coalesce(1).write.mode("overwrite").parquet(fs_path)
+    cols = ("doc_count", "sum_ttf_exact", "sum_ttf", "sum_df")
+    rows = [
+        {"field": f, "max_doc": max_doc,
+         **{c: int(old.get(f, {}).get(c) or 0) + int(batch_fs.get(f, {}).get(c) or 0)
+            for c in cols}}
+        for f in set(old) | set(batch_fs)
+    ]
+    write_field_stats(index_dir, rows, omit_norms)
 
 
 def start_incremental_index(

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 from pathlib import Path
@@ -25,3 +26,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs(group) as jobs:`` runs the block in its own Spark
+    job group; on exit ``jobs`` holds the ids of the jobs it submitted,
+    as the status tracker reports them (``group`` must be unique within
+    the session)."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def track(group):
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, group)
+        jobs = []
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return track

@@ -132,23 +132,17 @@ def test_field_stats_read_at_open(spark, rows, tmp_path):
     assert MaterializedIndex(spark, ixdir)._field_stats == want
 
 
-def test_cold_search_plans_without_spark_jobs(spark, rows, tmp_path):
+def test_cold_search_plans_without_spark_jobs(spark, spark_jobs, rows, tmp_path):
     ixdir = str(tmp_path / "ix")
     _build(spark, rows, ixdir)
     ix = MaterializedIndex(spark, ixdir)
-    sc = spark.sparkContext
     for i, qs in enumerate(["content:return", "content:return AND NOT content:buffer",
                             "content:parse OR content:index", '"return nil"',
                             "lang:go AND content:return"]):
         q = parse_query(qs, default_field="content", analyzer="simple")
-        group = f"term-seek-plan-{i}"
-        prev = sc.getLocalProperty("spark.jobGroup.id")
-        sc.setJobGroup(group, qs)
-        try:
+        with spark_jobs(f"term-seek-plan-{i}") as jobs:
             frame = Searcher(ix, "bm25").search(q, 5)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", prev)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], qs
+        assert jobs == [], qs
         frame.collect()
 
 
