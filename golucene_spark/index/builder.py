@@ -50,6 +50,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..analysis import get_analyzer
+from ..search.cache import SnapshotCache
 from . import smallfloat
 
 BLOCK_SIZE = 128  # core/codec/lucene41/postingsFormat.go:22
@@ -999,7 +1000,7 @@ class LogicalIndex:
         self.spark = docs.sparkSession
         self.spec = spec
         self.quantized = quantize_norms
-        self._cstats: dict[str, dict] = {}
+        self.snapshot_cache = SnapshotCache()
         docs = assign_doc_ids(docs, spec, num_segments)
         self._tf_all = tokenize_tf(docs, spec, analyzer, quantize_norms,
                                    index_positions=index_positions)
@@ -1040,25 +1041,25 @@ class LogicalIndex:
         return self
 
     def collection_stats_row(self, field: str) -> dict:
-        """Memoized (max_doc, doc_count, sum_ttf) for the field."""
-        if field not in self._cstats:
-            r = (
-                self.doc_stats.agg(
-                    F.countDistinct("doc_id").alias("max_doc"),
-                    F.sum(F.when(F.col("field") == field, 1).otherwise(0)).alias("doc_count"),
-                    F.sum(F.when(F.col("field") == field, F.col("length"))).alias("sum_ttf"),
-                ).collect()
-            )[0]
+        """(max_doc, doc_count, sum_ttf) for the field: one Spark job per
+        field per snapshot, cached in the snapshot cache."""
+        def compute():
+            r = self.doc_stats.agg(
+                F.countDistinct("doc_id").alias("max_doc"),
+                F.sum(F.when(F.col("field") == field, 1).otherwise(0)).alias("doc_count"),
+                F.sum(F.when(F.col("field") == field, F.col("length"))).alias("sum_ttf"),
+            ).collect()[0]
             omit = any(
                 f.name == field and getattr(f, "omit_norms", False)
                 for f in self.spec.text_fields
             )
-            self._cstats[field] = {
+            return {
                 "max_doc": int(r["max_doc"]),
                 "doc_count": int(r["doc_count"] or 0),
                 "sum_ttf": 0 if omit else int(r["sum_ttf"] or 0),
             }
-        return self._cstats[field]
+
+        return self.snapshot_cache.get("collection", field, compute)
 
 
 def dead_segments(index_dir: str) -> set[int]:
@@ -1262,6 +1263,7 @@ class MaterializedIndex:
         self._prune_files = ranges_ok and bool(self._term_ranges)
         self.last_prune_stats: tuple | None = None
         self._field_stats = read_field_stats(index_dir)
+        self.snapshot_cache = SnapshotCache()
 
     def postings_frame(self, field: str, terms: list[str]) -> DataFrame:
         """Block-level posting rows for the given terms, reading ONLY

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..search.cache import SnapshotCache
+
 # default docBase stride: far above SEGMENT_STRIDE * num_segments of
 # any single index, so shifted ids never collide (doc_id is int64)
 DOC_BASE_STRIDE = 1 << 50
@@ -26,10 +28,10 @@ class MultiIndex:
         self.indexes = list(indexes)
         self.stride = doc_base_stride
         self.spark = indexes[0].spark
-        quant = {getattr(ix, "quantized", True) for ix in indexes}
+        quant = {ix.quantized for ix in indexes}
         assert len(quant) == 1, "sub-indexes disagree on norm quantization"
         self.quantized = quant.pop()
-        self._cstats: dict[str, dict] = {}
+        self.snapshot_cache = SnapshotCache()
 
     def doc_base(self, i: int) -> int:
         return i * self.stride
@@ -72,19 +74,16 @@ class MultiIndex:
         return out
 
     def collection_stats_row(self, field: str) -> dict:
-        if field not in self._cstats:
-            max_doc = doc_count = sum_ttf = 0
-            for ix in self.indexes:
-                if hasattr(ix, "collection_stats_row"):
-                    r = ix.collection_stats_row(field)
-                    max_doc += int(r["max_doc"])
-                    doc_count += int(r.get("doc_count") or 0)
-                    sum_ttf += int(r["sum_ttf"] or 0)
-            self._cstats[field] = {
-                "field": field, "max_doc": max_doc,
-                "doc_count": doc_count, "sum_ttf": sum_ttf,
+        def compute():
+            rows = [ix.collection_stats_row(field) for ix in self.indexes]
+            return {
+                "field": field,
+                "max_doc": sum(int(r["max_doc"]) for r in rows),
+                "doc_count": sum(int(r.get("doc_count") or 0) for r in rows),
+                "sum_ttf": sum(int(r["sum_ttf"] or 0) for r in rows),
             }
-        return self._cstats[field]
+
+        return self.snapshot_cache.get("collection", field, compute)
 
     @property
     def doc_stats(self) -> DataFrame:

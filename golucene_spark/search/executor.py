@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .ast import (
@@ -114,6 +115,16 @@ def cursor_e6(score: float) -> int:
     )
 
 
+def norm_bytes(index, byte=None):
+    """The norm argument of the similarity's ``score_col`` / ``score_np``:
+    None when the index keeps unquantized lengths (the scorer reads dlq
+    instead), else the norm_byte column, or, given one doc's ``byte``,
+    a one-element array."""
+    if not index.quantized:
+        return None
+    return F.col("norm_byte") if byte is None else np.array([byte])
+
+
 def _collect_terms(q, out):
     if isinstance(q, TermQuery):
         out.add((q.field, q.term))
@@ -154,86 +165,61 @@ class Searcher:
     def __init__(self, index, similarity: str = "bm25"):
         self.index = index
         self.sim = get_similarity(similarity) if isinstance(similarity, str) else similarity
-        # stats are properties of the index SNAPSHOT (df/ttf never change
-        # under one open index — deletes don't decrement df until merge,
-        # exactly the reference's semantics), so the memo lives ON the
-        # index object and is shared by every Searcher over it: a fresh
-        # Searcher per query — the normal serving pattern — seeks
-        # term_dict only for terms the index hasn't seen yet.
-        self._cstats_cache = getattr(index, "_cstats_shared", None)
-        if self._cstats_cache is None:
-            self._cstats_cache = index._cstats_shared = {}
-        self._tstats_cache = getattr(index, "_tstats_shared", None)
-        if self._tstats_cache is None:
-            self._tstats_cache = index._tstats_shared = {}
-        # prepared-plan memo (same snapshot-lifetime rule as the stats
-        # memos): building a top-k DataFrame costs 0.1-0.2s of pure
-        # driver-side plan construction (measured, BENCH/
-        # decompose_r6_before.json "plan_build") — for a repeated query
-        # the LOGICAL PLAN is identical, so reuse the immutable
-        # DataFrame.  Nothing is precomputed: every collect() on the
-        # memoized frame re-executes from the index tables.
-        self._plan_cache = getattr(index, "_plan_shared", None)
-        if self._plan_cache is None:
-            self._plan_cache = index._plan_shared = {}
+        # stats, expansions and plans are properties of the index
+        # SNAPSHOT (deletes don't decrement df until merge, exactly the
+        # reference's semantics): a fresh Searcher per query — the normal
+        # serving pattern — reuses what earlier ones put in its cache
+        self.cache = index.snapshot_cache
 
-    def _plan_key(self, kind, query, *extra):
-        """Hashable memo key for a prepared plan, or None when any part
-        is unhashable (custom similarity state, exotic query objects)."""
+    def _planned(self, build, *key):
+        """A prepared plan through the snapshot cache: building a top-k
+        DataFrame costs 0.1-0.2s of driver-side plan construction (BENCH/
+        decompose_r6_before.json "plan_build"), and a repeated query's
+        immutable DataFrame re-executes from the index tables on every
+        collect().  An unhashable key part (custom similarity state,
+        exotic query objects) bypasses the cache."""
         try:
             sim_state = tuple(
                 (n, v) for n, v in sorted(vars(self.sim).items())
                 if isinstance(v, (int, float, str, bool))
             )
-            key = (kind, type(self.sim).__name__, sim_state, query, *extra)
+            key = (type(self.sim).__name__, sim_state, *key)
             hash(key)
-            return key
         except TypeError:
-            return None
+            return build()
+        return self.cache.get("plan", key, build)
 
     # -- statistics ------------------------------------------------------
     def _collection_stats(self, field: str) -> dict:
-        if field not in self._cstats_cache:
-            if hasattr(self.index, "collection_stats_row"):
-                row = self.index.collection_stats_row(field)
-                self._cstats_cache[field] = {
-                    "max_doc": int(row["max_doc"]),
-                    "sum_ttf": int(row["sum_ttf"] or 0),
-                }
-            else:
-                r = self.index.collection_stats(field).collect()[0]
-                self._cstats_cache[field] = {
-                    "max_doc": int(r["max_doc"]),
-                    "sum_ttf": int(r["sum_ttf"] or 0),
-                }
-        return self._cstats_cache[field]
+        row = self.index.collection_stats_row(field)
+        return {"max_doc": int(row["max_doc"]), "sum_ttf": int(row["sum_ttf"] or 0)}
 
     def _term_stats(self, query) -> dict[tuple, _TermStats]:
         return self._seek_terms(_collect_terms(query, set()))
 
     def _seek_terms(self, terms) -> dict[tuple, _TermStats]:
-        """{(field, term): _TermStats} through the snapshot memo: (field,
-        term) stats never change under one open index, so repeated
-        queries (and wand_topk's early-out falling back to search())
-        seek each term once.  Misses are published only after the seek
-        returns: a concurrent Searcher never reads a half-filled entry,
-        and a failed seek caches nothing."""
-        by_field: dict[str, list[str]] = {}
-        for f, t in terms:
-            if (f, t) not in self._tstats_cache:
+        """{(field, term): _TermStats} through the snapshot cache:
+        (field, term) stats never change under one open index, so
+        repeated queries (and wand_topk's early-out falling back to
+        search()) seek each term once, one lookup_term_stats per field
+        for the terms not cached."""
+        def seek(missing):
+            by_field: dict[str, list[str]] = {}
+            for f, t in missing:
                 by_field.setdefault(f, []).append(t)
-        found: dict[tuple, _TermStats] = {}
-        for f, ts in by_field.items():
-            hits = self.index.lookup_term_stats(f, ts)
-            for t in ts:
-                d = hits.get(t)
-                found[(f, t)] = _TermStats() if d is None else _TermStats(
-                    int(d["df"]), int(d["ttf"]),
-                    d.get("bmf_min"), d.get("bmf_max"),
-                    d.get("bdlq_min"), d.get("bdlq_max"),
-                )
-        self._tstats_cache.update(found)
-        return {k: found[k] if k in found else self._tstats_cache[k] for k in terms}
+            found = {}
+            for f, ts in by_field.items():
+                hits = self.index.lookup_term_stats(f, ts)
+                for t in ts:
+                    d = hits.get(t)
+                    found[(f, t)] = _TermStats() if d is None else _TermStats(
+                        int(d["df"]), int(d["ttf"]),
+                        d.get("bmf_min"), d.get("bmf_max"),
+                        d.get("bdlq_min"), d.get("bdlq_max"),
+                    )
+            return found
+
+        return self.cache.get_many("terms", terms, seek)
 
     def _term_scalar(self, st, cs) -> float:
         """Per-term scoring scalar: idf for BM25/classic, the Dirichlet
@@ -292,14 +278,13 @@ class Searcher:
         idf = self._term_scalar(st, cs)
         avgdl = self.sim.avgdl(cs["sum_ttf"], cs["max_doc"])
         p = self.index.postings_for_terms(q.field, [q.term])
-        norm_col = F.col("norm_byte") if getattr(self.index, "quantized", True) else None
         kwargs = {}
         if self.sim.uses_coord:  # classic folds queryNorm into the weight
             kwargs["query_norm"] = query_norm
         score = self.sim.score_col(
             F.col("freq").cast("double"),
             F.col("dlq"),
-            norm_col,
+            norm_bytes(self.index),
             idf,
             avgdl,
             q.boost,
@@ -330,10 +315,9 @@ class Searcher:
         avgdl = self.sim.avgdl(cs["sum_ttf"], cs["max_doc"])
         frame = phrase_freq_frame(self.index, q.field, list(q.terms), q.slop,
                                   in_order=getattr(q, 'in_order', False))
-        norm_col = F.col("norm_byte") if getattr(self.index, "quantized", True) else None
         kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
         score = self.sim.score_col(
-            F.col("freq").cast("double"), F.col("dlq"), norm_col,
+            F.col("freq").cast("double"), F.col("dlq"), norm_bytes(self.index),
             idf, avgdl, q.boost, **kwargs,
         )
         return frame.select("doc_id", score.alias("score"))
@@ -363,10 +347,9 @@ class Searcher:
             self.index, q.field, live_sets, q.slop,
             in_order=getattr(q, "in_order", False),
         )
-        norm_col = F.col("norm_byte") if getattr(self.index, "quantized", True) else None
         kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
         score = self.sim.score_col(
-            F.col("freq").cast("double"), F.col("dlq"), norm_col,
+            F.col("freq").cast("double"), F.col("dlq"), norm_bytes(self.index),
             idf, avgdl, q.boost, **kwargs,
         )
         return frame.select("doc_id", score.alias("score"))
@@ -423,55 +406,15 @@ class Searcher:
             )
         raise TypeError(f"unsupported query {type(q)}")
 
-    def _expand_memo(self, key, fn):
-        """Multi-term expansions scan the term dictionary; like term
-        stats, the matched-term set is a property of the index SNAPSHOT,
-        so the memo lives on the index object and repeated fuzzy/
-        wildcard/regexp/range searches skip the dictionary job."""
-        memo = getattr(self.index, "_expand_shared", None)
-        if memo is None:
-            memo = self.index._expand_shared = {}
-        if key not in memo:
-            memo[key] = fn()
-        return memo[key]
-
     def _resolve(self, q):
         """Expand deferred multi-term nodes against the index (the
-        Query.Rewrite fixpoint of search.go:173-181 for wildcard)."""
-        if isinstance(q, WildcardQuery):
-            from .multiterm import expand_wildcard
-
-            return self._expand_memo(
-                ("w", q.field, q.pattern, q.boost),
-                lambda: expand_wildcard(self.index, q.field, q.pattern, q.boost),
-            )
-        if isinstance(q, FuzzyQuery):
-            from .multiterm import expand_fuzzy
-
-            pl = getattr(q, "prefix_length", 0)
-            return self._expand_memo(
-                ("f", q.field, q.term, q.max_edits, q.boost, pl),
-                lambda: expand_fuzzy(self.index, q.field, q.term, q.max_edits,
-                                     q.boost, prefix_length=pl),
-            )
-        if isinstance(q, RegexpQuery):
-            from .multiterm import expand_regexp
-
-            return self._expand_memo(
-                ("r", q.field, q.regex, q.boost),
-                lambda: expand_regexp(self.index, q.field, q.regex, q.boost),
-            )
-        if isinstance(q, TermRangeQuery):
-            from .multiterm import expand_term_range
-
-            return self._expand_memo(
-                ("tr", q.field, q.lower, q.upper, q.include_lower,
-                 q.include_upper, q.boost),
-                lambda: expand_term_range(
-                    self.index, q.field, q.lower, q.upper,
-                    q.include_lower, q.include_upper, q.boost,
-                ),
-            )
+        Query.Rewrite fixpoint of search.go:173-181 for wildcard).  An
+        expansion scans the term dictionary; like term stats, the
+        matched-term set is a property of the index SNAPSHOT, so it is
+        cached under the frozen query node and repeated fuzzy/wildcard/
+        regexp/range searches skip the dictionary job."""
+        if isinstance(q, (WildcardQuery, FuzzyQuery, RegexpQuery, TermRangeQuery)):
+            return self.cache.get("expand", q, lambda: self._expand(q))
         if isinstance(q, BooleanQuery):
             return BooleanQuery(
                 tuple(
@@ -487,6 +430,19 @@ class Searcher:
         if isinstance(q, ConstantScoreQuery):
             return ConstantScoreQuery(self._resolve(q.query), q.boost)
         return q
+
+    def _expand(self, q):
+        from . import multiterm as mt
+
+        if isinstance(q, WildcardQuery):
+            return mt.expand_wildcard(self.index, q.field, q.pattern, q.boost)
+        if isinstance(q, FuzzyQuery):
+            return mt.expand_fuzzy(self.index, q.field, q.term, q.max_edits,
+                                   q.boost, prefix_length=q.prefix_length)
+        if isinstance(q, RegexpQuery):
+            return mt.expand_regexp(self.index, q.field, q.regex, q.boost)
+        return mt.expand_term_range(self.index, q.field, q.lower, q.upper,
+                                    q.include_lower, q.include_upper, q.boost)
 
     def _flat_terms_frame(self, field, entries, stats, query_norm: float) -> DataFrame:
         """Fast path: N same-field terms -> ONE term-pruned postings scan
@@ -512,11 +468,10 @@ class Searcher:
             F.create_map(*[x for k, v in m.items() for x in (F.lit(k), F.lit(v))]),
             F.col("term"),
         ).cast(t)
-        norm_col = F.col("norm_byte") if getattr(self.index, "quantized", True) else None
         kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
         uniform_boost = len(set(boost_map.values())) == 1
         score = self.sim.score_col(
-            F.col("freq").cast("double"), F.col("dlq"), norm_col,
+            F.col("freq").cast("double"), F.col("dlq"), norm_bytes(self.index),
             mk(idf_map), avgdl,
             next(iter(boost_map.values())) if uniform_boost else mk(boost_map),
             **kwargs,
@@ -562,16 +517,20 @@ class Searcher:
         """The constant per-doc score of a keyword-field TermQuery,
         computed with the exact operation order of score_col (Python
         float ops are the same IEEE-754 doubles as the JVM's)."""
-        import numpy as np
-
         st = stats[(q.field, q.term)]
         cs = self._collection_stats(q.field)
         idf = self._term_scalar(st, cs)
         avgdl = self.sim.avgdl(cs["sum_ttf"], cs["max_doc"])
-        nb = np.array([124]) if getattr(self.index, "quantized", True) else None
+        # norm byte 124 = encode(1.0): keyword fields omit norms
+        return self._score_one(1.0, 1.0, 124, idf, avgdl, q.boost, query_norm)
+
+    def _score_one(self, freq, dlq, byte, idf, avgdl, boost, query_norm) -> float:
+        """One doc's score on the driver with score_col's arithmetic (the
+        similarity's NumPy twin), so explain == score."""
         kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
         return float(self.sim.score_np(
-            np.array([1.0]), np.array([1.0]), nb, idf, avgdl, q.boost, **kwargs
+            np.array([float(freq)]), np.array([float(dlq)]),
+            norm_bytes(self.index, byte), idf, avgdl, boost, **kwargs,
         )[0])
 
     def _boolean_frame(self, q: BooleanQuery, stats, query_norm: float) -> DataFrame | None:
@@ -763,21 +722,17 @@ class Searcher:
     # -- entry points ------------------------------------------------------
     def score_frame(self, query) -> DataFrame:
         """Full (doc_id, score) frame for a query (no top-k)."""
-        key = self._plan_key("score", query)
-        if key is not None and key in self._plan_cache:
-            return self._plan_cache[key]
-        q = self._resolve(query.rewrite())
-        q = q.rewrite() if hasattr(q, "rewrite") else q
-        stats = self._term_stats(q)
-        qn = self.sim.query_norm(self._sum_sq(q, stats))
-        f = self._frame(q, stats, qn)
-        if f is None:
-            out = empty_results(self.index.spark)
-        else:
-            out = f.select(F.col("doc_id").cast("long"), F.col("score").cast("double"))
-        if key is not None:
-            self._plan_cache[key] = out
-        return out
+        def build():
+            q = self._resolve(query.rewrite())
+            q = q.rewrite() if hasattr(q, "rewrite") else q
+            stats = self._term_stats(q)
+            qn = self.sim.query_norm(self._sum_sq(q, stats))
+            f = self._frame(q, stats, qn)
+            if f is None:
+                return empty_results(self.index.spark)
+            return f.select(F.col("doc_id").cast("long"), F.col("score").cast("double"))
+
+        return self._planned(build, "score", query)
 
     def explain(self, query, doc_id: int) -> dict:
         """Score decomposition for one doc (Q13, search.go:129-152 /
@@ -804,15 +759,8 @@ class Searcher:
                 return {"match": False, "value": 0.0,
                         "description": f"no match on {q.field}:{q.term}"}
             r = rows[0]
-            import numpy as np
-
-            kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
-            value = float(
-                self.sim.score_np(
-                    np.array([float(r["freq"])]), np.array([r["dlq"]]),
-                    np.array([r["norm_byte"]]), idf, avgdl, q.boost, **kwargs,
-                )[0]
-            )
+            value = self._score_one(r["freq"], r["dlq"], r["norm_byte"], idf, avgdl,
+                                    q.boost, query_norm)
             return {
                 "match": True,
                 "value": value,
@@ -846,15 +794,8 @@ class Searcher:
             idf = sum(self.sim.idf(stats[(q.field, t)].df, cs["max_doc"])
                       for t in q.terms)
             avgdl = self.sim.avgdl(cs["sum_ttf"], cs["max_doc"])
-            import numpy as np
-
-            norm = (np.array([r["norm_byte"]])
-                    if getattr(self.index, "quantized", True) else None)
-            kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
-            value = float(self.sim.score_np(
-                np.array([float(r["freq"])]), np.array([r["dlq"]]),
-                norm, idf, avgdl, q.boost, **kwargs,
-            )[0])
+            value = self._score_one(r["freq"], r["dlq"], r["norm_byte"], idf, avgdl,
+                                    q.boost, query_norm)
             return {
                 "match": True,
                 "value": value,
@@ -895,15 +836,8 @@ class Searcher:
             idf = sum(self.sim.idf(stats[(q.field, t)].df, cs["max_doc"])
                       for ts in q.term_sets for t in ts)
             avgdl = self.sim.avgdl(cs["sum_ttf"], cs["max_doc"])
-            import numpy as np
-
-            norm = (np.array([r["norm_byte"]])
-                    if getattr(self.index, "quantized", True) else None)
-            kwargs = {"query_norm": query_norm} if self.sim.uses_coord else {}
-            value = float(self.sim.score_np(
-                np.array([float(r["freq"])]), np.array([r["dlq"]]),
-                norm, idf, avgdl, q.boost, **kwargs,
-            )[0])
+            value = self._score_one(r["freq"], r["dlq"], r["norm_byte"], idf, avgdl,
+                                    q.boost, query_norm)
             return {
                 "match": True,
                 "value": value,
@@ -1009,13 +943,8 @@ class Searcher:
             from .parser import parse_query
 
             query = parse_query(query)
-        key = self._plan_key("topk", query, k)
-        if key is not None and key in self._plan_cache:
-            return self._plan_cache[key]
-        out = collect_topk(self.score_frame(query), k)
-        if key is not None:
-            self._plan_cache[key] = out
-        return out
+        return self._planned(lambda: collect_topk(self.score_frame(query), k),
+                             "topk", query, k)
 
     def search_with_total(self, query, k: int = 10,
                           hydrate: bool = False) -> tuple[int, DataFrame]:

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .ast import PhraseQuery
+from .executor import norm_bytes
 
 
 def _flat_rows_adj(col, term_offset: int, n_rows: int):
@@ -382,9 +383,8 @@ def payload_term_search(searcher, field: str, term: str, k: int = 10,
         if s.sim.uses_coord
         else {}
     )
-    norm_col = F.col("norm_byte") if getattr(s.index, "quantized", True) else None
     base = s.sim.score_col(
-        F.col("freq").cast("double"), F.col("dlq"), norm_col, idf, avgdl, 1.0,
+        F.col("freq").cast("double"), F.col("dlq"), norm_bytes(s.index), idf, avgdl, 1.0,
         **kwargs,
     )
     score = (base * avg_payload) if include_span_score else avg_payload
@@ -436,9 +436,8 @@ def span_first_search(searcher, field: str, term: str, end: int,
         return empty_results(searcher.index.spark)
     frame, idf, avgdl, kwargs = parts
     s = searcher
-    norm_col = F.col("norm_byte") if getattr(s.index, "quantized", True) else None
     score = s.sim.score_col(
-        F.col("_qf").cast("double"), F.col("dlq"), norm_col, idf, avgdl, 1.0,
+        F.col("_qf").cast("double"), F.col("dlq"), norm_bytes(s.index), idf, avgdl, 1.0,
         **kwargs,
     )
     return (
@@ -489,9 +488,8 @@ def span_or_search(searcher, field: str, terms: list[str],
         return empty_results(searcher.index.spark)
     frame, idf, avgdl, kwargs = parts
     s = searcher
-    norm_col = F.col("norm_byte") if getattr(s.index, "quantized", True) else None
     score = s.sim.score_col(
-        F.col("_qf"), F.col("dlq"), norm_col, idf, avgdl, 1.0, **kwargs
+        F.col("_qf"), F.col("dlq"), norm_bytes(s.index), idf, avgdl, 1.0, **kwargs
     )
     return (
         frame.select("doc_id", score.alias("score"))
@@ -557,9 +555,8 @@ def span_not_search(searcher, field: str, include: str, exclude: str,
         return empty_results(searcher.index.spark)
     frame, idf, avgdl, kwargs = parts
     s = searcher
-    norm_col = F.col("norm_byte") if getattr(s.index, "quantized", True) else None
     score = s.sim.score_col(
-        F.col("_qf").cast("double"), F.col("dlq"), norm_col, idf, avgdl, 1.0,
+        F.col("_qf").cast("double"), F.col("dlq"), norm_bytes(s.index), idf, avgdl, 1.0,
         **kwargs,
     )
     return (
@@ -574,8 +571,6 @@ def _span_explain(searcher, parts, doc_id: int, description: str) -> dict:
     components from the span's base frame, then recompute the score
     driver-side with the similarity's numpy twin — value equals the
     span search's frame score exactly (same arithmetic)."""
-    import numpy as np
-
     if parts is None:
         return {"match": False, "value": 0.0,
                 "description": f"no match: {description} (term absent)"}
@@ -585,13 +580,8 @@ def _span_explain(searcher, parts, doc_id: int, description: str) -> dict:
         return {"match": False, "value": 0.0,
                 "description": f"no match: {description}"}
     r = rows[0]
-    s = searcher
-    norm = (np.array([r["norm_byte"]])
-            if getattr(s.index, "quantized", True) else None)
-    value = float(s.sim.score_np(
-        np.array([float(r["_qf"])]), np.array([r["dlq"]]),
-        norm, idf, avgdl, 1.0, **kwargs,
-    )[0])
+    value = searcher._score_one(r["_qf"], r["dlq"], r["norm_byte"], idf, avgdl, 1.0,
+                                kwargs.get("query_norm", 1.0))
     return {
         "match": True,
         "value": value,

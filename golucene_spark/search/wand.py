@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .ast import BooleanQuery, Occur, TermQuery
-from .executor import Searcher
+from .executor import Searcher, norm_bytes
 
 # early-out: when the summed per-term block-ub lower bound sits within
 # this fraction of the summed upper bound, block metadata cannot
@@ -311,9 +311,8 @@ def _wand_fused(searcher, q, k, weights, avgdl, term_blocks, blocks,
 
         flat = filter_live(flat, index._tombstones)
     idf_map = F.create_map(*[x for kk, v in weights.items() for x in (F.lit(kk), F.lit(v))])
-    norm_col = F.col("norm_byte") if getattr(index, "quantized", True) else None
     score = searcher.sim.score_col(
-        F.col("freq").cast("double"), F.col("dlq"), norm_col,
+        F.col("freq").cast("double"), F.col("dlq"), norm_bytes(index),
         F.element_at(idf_map, F.col("term")), avgdl, 1.0,
     )
     from .executor import _score_e6

@@ -7,8 +7,7 @@ from golucene_spark.index import CorpusSpec, FieldSpec, LogicalIndex
 from golucene_spark.search import Searcher, TermQuery, parse_query
 
 
-@pytest.fixture(scope="module")
-def ix(spark):
+def _index(spark, quantize_norms=True):
     df = spark.createDataFrame(
         [(0, "bar", "go"), (1, "bar bar baz", "py"), (2, "qux", "go")],
         "doc_id long, content string, lang string",
@@ -18,7 +17,12 @@ def ix(spark):
         keyword_fields=[FieldSpec("lang", "lang", False)],
         key_cols=["doc_id"], id_col="doc_id", meta_cols=["lang"],
     )
-    return LogicalIndex(df, spec).cache()
+    return LogicalIndex(df, spec, quantize_norms=quantize_norms).cache()
+
+
+@pytest.fixture(scope="module")
+def ix(spark):
+    return _index(spark)
 
 
 @pytest.mark.parametrize("sim", ["bm25", "classic"])
@@ -37,6 +41,18 @@ def test_explain_matches_score(ix, sim, qs):
         else:
             assert not exp["match"]
             assert exp["value"] == 0.0
+
+
+@pytest.mark.parametrize("sim", ["bm25", "classic"])
+def test_explain_matches_score_unquantized(spark, sim):
+    """With quantize_norms=False the scorer reads exact lengths (dlq),
+    and explain must use the same lengths, not the norm byte."""
+    s = Searcher(_index(spark, quantize_norms=False), sim)
+    q = parse_query("content:bar")
+    scores = {r["doc_id"]: r["score"] for r in s.score_frame(q).collect()}
+    assert set(scores) == {0, 1}
+    for doc, score in scores.items():
+        assert s.explain(q, doc)["value"] == pytest.approx(score, rel=1e-9)
 
 
 def test_explain_negative_boost(ix):

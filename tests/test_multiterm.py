@@ -395,8 +395,7 @@ def test_trigram_short_run_prunes_and_matches(spark, tmp_path):
     hits = {r["doc_id"]: round(r["score"], 9) for r in s.search(q, 10).collect()}
     assert ix.last_multiterm_stats["path"] == "trigram"
     ix.trigram = None
-    ix._expand_shared = {}  # drop the snapshot expansion memo
-    ix._plan_shared = {}    # ...and the prepared-plan memo built on it
+    ix.snapshot_cache.clear()  # drop the expansions and the plans built on them
     s2 = Searcher(ix, "bm25")
     hits_full = {r["doc_id"]: round(r["score"], 9)
                  for r in s2.search(q, 10).collect()}

@@ -200,10 +200,12 @@ def test_failed_seek_caches_nothing(spark, rows, tmp_path):
     q = parse_query("content:return", default_field="content", analyzer="simple")
     with pytest.raises(OSError):
         Searcher(ix, "bm25").search(q, 5)
-    assert not ix._tstats_shared
+    assert len(ix.snapshot_cache.lru["terms"]) == 0
     ix.lookup_term_stats = seek
     assert Searcher(ix, "bm25").search(q, 5).collect()
-    assert ix._tstats_shared[("content", "return")].df > 0
+    cached = ix.snapshot_cache.get("terms", ("content", "return"),
+                                   lambda: pytest.fail("the seek was not cached"))
+    assert cached.df > 0
 
 
 def test_multi_index_and_mlt_use_the_seek(spark, rows, tmp_path):
