@@ -1082,18 +1082,23 @@ def dead_segments(index_dir: str) -> set[int]:
     return dead
 
 
-def _arrow_dataset(path: str):
-    """pyarrow dataset over a Spark-written parquet directory, its files
-    listed once, here.  The schema is the UNION of the files' schemas
-    (what Spark's mergeSchema resolves): a column absent from some chunk
-    reads as null in that chunk's rows."""
+def _arrow_dataset(path):
+    """pyarrow dataset over a Spark-written parquet directory (or a list
+    of its files), its files listed once, here; None when it holds no
+    data file.  The schema is the UNION of the files' schemas (what
+    Spark's mergeSchema resolves): a column absent from some chunk reads
+    as null in that chunk's rows."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
     d = ds.dataset(path, format="parquet")
-    return d.replace_schema(
-        pa.unify_schemas([f.physical_schema for f in d.get_fragments()])
-    )
+    frags = list(d.get_fragments())
+    if not frags:
+        return None
+    # unify_schemas also relaxes a list's element nullability, which
+    # Spark writes differently before and after a merge
+    schema = pa.unify_schemas([f.physical_schema for f in frags])
+    return ds.FileSystemDataset(frags, schema, d.format, d.filesystem)
 
 
 def read_field_stats(index_dir: str) -> dict[str, dict]:
@@ -1183,6 +1188,28 @@ def write_field_stats(index_dir: str, rows: list[dict], omit_norms: set[str]) ->
             os.remove(path)
 
 
+def _posting_files(index_dir: str) -> list[str]:
+    """Index-relative paths of the posting data files (the kind=post
+    partitions; layouts without a kind partition keep every file),
+    sorted: the same names the manifest's term_ranges key on."""
+    root = os.path.join(index_dir, "postings")
+    out = []
+    for d, subdirs, files in os.walk(root):
+        subdirs[:] = [x for x in subdirs if not x.startswith("kind=") or x == "kind=post"]
+        out.extend(
+            os.path.relpath(os.path.join(d, f), index_dir) for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+    return sorted(out)
+
+
+# postings_arrays' rows
+_POSTING_ROWS = pa.schema([
+    ("term", pa.string()), ("doc_id", pa.int64()), ("freq", pa.int32()),
+    ("dlq", pa.float64()), ("norm_byte", pa.int32()),
+])
+
+
 # term_dict block-metadata spread columns and how term stats fold them
 # across segments (WAND's degenerate-bounds early-out reads the result)
 _SPREAD_AGGS = (("bmf_min", "min"), ("bmf_max", "max"),
@@ -1193,7 +1220,15 @@ class MaterializedIndex:
     """Reader over an index built by IndexBuilder (term-pruned scans).
     Reads the LIVE segment set: segments superseded by merges (manifest
     kind=merge records) are filtered out — the segments_N visibility
-    protocol (segmentInfos.go:21-135) as a manifest + filter."""
+    protocol (segmentInfos.go:21-135) as a manifest + filter.
+
+    The files listed at open ARE the snapshot: the Spark frames
+    (``postings``, ``term_dict``, ...) and the driver-side Arrow
+    datasets (term_dict for the term-stats seek, postings for the
+    driver top-k kernel, tombstones) are listed once, here, and both
+    search placements read them.  Reassigning a frame on an open index
+    (``ix.postings = ...``) changes only what the Spark placement reads;
+    the driver placement keeps reading the files listed at open."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
@@ -1215,6 +1250,11 @@ class MaterializedIndex:
         # term_dict files, listed once at open — this listing IS the
         # snapshot, like spark.read.parquet's listing above
         self._term_dict_ds = _arrow_dataset(os.path.join(index_dir, "term_dict"))
+        # the kind=post posting files, the driver top-k kernel's source
+        post_files = _posting_files(index_dir)
+        self._postings_ds = _arrow_dataset(
+            [os.path.join(index_dir, f) for f in post_files]
+        ) if post_files else None
         self._dead = sorted(int(x) for x in dead_segments(index_dir))
         if self._dead:
             alive = lambda df: df.filter(~F.col("segment_id").isin(self._dead))
@@ -1224,9 +1264,12 @@ class MaterializedIndex:
         # W12 deletes: tombstoned docs filtered at read time (liveDocs);
         # stats intentionally keep counting them until expunge (Lucene's
         # numDocs vs maxDoc semantics)
-        from .deletes import tombstones as _tombstones
+        from .deletes import tombstone_table, tombstones as _tombstones
 
         self._tombstones = _tombstones(spark, index_dir)
+        # the same tombstones read with Arrow: the kernel's liveness mask
+        # and the Spark plans' literal liveness predicate
+        self._tomb_table = tombstone_table(index_dir)
         # optional trigram side table (sublinear seek for prefix-less
         # wildcard/regexp patterns); None when absent or stale
         from .trigram import load_trigram_index
@@ -1317,11 +1360,51 @@ class MaterializedIndex:
             *( [F.col("e.positions").alias("positions")] if with_positions else [] ),
             *( [F.col("e.payloads").alias("payloads")] if with_payloads else [] ),
         )
-        if self._tombstones is not None:
-            from .deletes import filter_live
+        from .deletes import live_rows
 
-            out = filter_live(out, self._tombstones)
-        return out.drop("segment_id")
+        return live_rows(self, out).drop("segment_id")
+
+    def postings_arrays(self, field: str, terms: list[str]):
+        """The Arrow twin of ``postings_for_terms``: a pyarrow Table
+        (term, doc_id, freq, dlq, norm_byte) of the live postings of
+        (field, terms), read on the driver from the posting files listed
+        at open.  Same file pruning (manifest term_ranges), dead
+        segments and tombstones (full deletes, update supersedes,
+        merged-origin exact segments) as the Spark frame."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        src = self._postings_ds
+        if src is not None and self._prune_files:
+            by_rel = {os.path.relpath(f.path, self.index_dir): f for f in src.get_fragments()}
+            frags = [f for rel, f in by_rel.items() if rel in self._term_ranges
+                     and _ranges_may_contain(self._term_ranges[rel], field, terms)]
+            self.last_prune_stats = (len(self._term_ranges), len(frags))
+            src = ds.FileSystemDataset(frags, src.schema, src.format, src.filesystem)
+        if src is None or not terms:
+            return _POSTING_ROWS.empty_table()
+        flt = (pc.field("field") == field) & pc.field("term").isin(list(terms))
+        if self._dead:
+            flt &= ~pc.field("segment_id").isin(self._dead)
+        blocks = src.to_table(
+            columns=["segment_id", "term", "doc_ids", "freqs", "dlqs", "norm_bytes"],
+            filter=flt,
+        )
+        parent = pc.list_parent_indices(blocks.column("doc_ids"))
+        rows = pa.table(
+            [pc.take(blocks.column("term"), parent)]
+            + [pc.list_flatten(blocks.column(c))
+               for c in ("doc_ids", "freqs", "dlqs", "norm_bytes")],
+            names=_POSTING_ROWS.names,
+        ).cast(_POSTING_ROWS)
+        if self._tomb_table is not None:
+            from .deletes import live_mask
+
+            seg = pc.take(blocks.column("segment_id"), parent).to_numpy()
+            rows = rows.filter(pa.array(live_mask(
+                self._tomb_table, rows.column("doc_id").to_numpy(), seg)))
+        return rows
 
     def lookup_term_stats(self, field: str, terms: list[str]) -> dict[str, dict]:
         """TermContext seek (core/index/terms.go:60-120) on the driver:
@@ -1433,11 +1516,9 @@ class MaterializedIndex:
             tv = tv.filter(F.col("field") == field)
         if doc_ids is not None:
             tv = tv.filter(F.col("doc_id").isin([int(d) for d in doc_ids]))
-        if self._tombstones is not None:
-            from .deletes import filter_live
+        from .deletes import live_rows
 
-            tv = filter_live(tv, self._tombstones)
-        return tv.drop("chunk")
+        return live_rows(self, tv).drop("chunk")
 
     def term_vector(self, doc_id: int, field: str | None = None) -> list[dict]:
         """getTermVector(docID[, field]) (IndexReader role): the doc's

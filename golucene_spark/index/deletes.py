@@ -11,7 +11,11 @@ rewrites the segments — exactly numDocs vs maxDoc in Lucene.
 A delete's ids already sit on the driver (the caller's list, a flushed
 chunk's doc_meta, a collected delete-by-query match set), so each
 tombstone generation is one small parquet file written with Arrow on
-the driver: ``delete_docs`` starts no Spark job.
+the driver: ``delete_docs`` starts no Spark job.  A reader reads them
+back with Arrow once per open (``tombstone_table``): the driver-side
+top-k kernel masks posting rows with that table (``live_mask``), and
+Spark plans filter with a literal predicate built from it
+(``live_predicate``) while it holds at most LITERAL_TOMBSTONES rows.
 """
 
 from __future__ import annotations
@@ -21,6 +25,12 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+# tombstone rows up to which a Spark plan filters liveness with a
+# literal predicate (In/InSet over the ids) instead of an anti-join: the
+# join broadcasts a hash relation of at least 1 MB per execution however
+# few ids it holds; a predicate over a few hundred ids costs nothing
+LITERAL_TOMBSTONES = 1024
 
 
 def _tombstone_dir(index_dir: str) -> str:
@@ -132,6 +142,103 @@ def tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
         )
         t = t.unionByName(exact)
     return t
+
+
+def tombstone_table(index_dir: str):
+    """The snapshot's tombstones as an Arrow table (doc_id,
+    before_segment, exact_segment) with ``tombstones()``'s rows, read
+    on the driver, or None when the index has none.  The exact_segment
+    rows for merged segments are synthesized from the manifest as
+    ``tombstones()`` does."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from .builder import _arrow_dataset
+    from .merge import merged_origin_ranges
+
+    d = _tombstone_dir(index_dir)
+    t = _arrow_dataset(d) if os.path.isdir(d) else None
+    if t is None:
+        return None
+    scoped = "before_segment" in t.schema.names  # absent before updates existed
+    t = t.to_table(columns=["doc_id"] + (["before_segment"] if scoped else []))
+    n = t.num_rows
+    base = pa.table({
+        "doc_id": t.column("doc_id").cast(pa.int64()),
+        "before_segment": (t.column("before_segment").cast(pa.int64()) if scoped
+                           else pa.nulls(n, pa.int64())),
+        "exact_segment": pa.nulls(n, pa.int64()),
+    })
+    parts = [base]
+    for m, (_, maxorig) in merged_origin_ranges(index_dir).items():
+        hit = base.filter(pc.field("before_segment") > maxorig)
+        parts.append(hit.set_column(2, "exact_segment",
+                                    pa.array([int(m)] * len(hit), pa.int64())))
+    return pa.concat_tables(parts)
+
+
+def _tomb_groups(table):
+    """(full-delete ids, {before_segment V: ids}, {exact_segment M: ids})
+    of a tombstone_table: the three ways a tombstone kills a row."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    col = lambda c: pc.fill_null(table.column(c), -1).to_numpy()  # ids >= 0
+    doc, before, exact = col("doc_id"), col("before_segment"), col("exact_segment")
+    scoped = (before >= 0) & (exact < 0)
+    return (
+        np.unique(doc[(before < 0) & (exact < 0)]),
+        {int(v): np.unique(doc[scoped & (before == v)]) for v in np.unique(before[scoped])},
+        {int(m): np.unique(doc[exact == m]) for m in np.unique(exact[exact >= 0])},
+    )
+
+
+def live_mask(table, doc_id, segment_id):
+    """NumPy liveness of posting rows (doc_id[i], segment_id[i]) under a
+    tombstone_table: the row-wise twin of ``filter_live``'s anti-join."""
+    import numpy as np
+
+    doc_id = np.asarray(doc_id)
+    segment_id = np.asarray(segment_id)
+    full, scoped, exact = _tomb_groups(table)
+    dead = np.isin(doc_id, full)
+    for v, ids in scoped.items():
+        dead |= (segment_id < v) & np.isin(doc_id, ids)
+    for m, ids in exact.items():
+        dead |= (segment_id == m) & np.isin(doc_id, ids)
+    return ~dead
+
+
+def live_predicate(table, seg_col: str | None = "segment_id"):
+    """The liveness filter of ``filter_live`` as one literal Column over
+    a tombstone_table: no join, no broadcast.  Without a ``seg_col``
+    only full deletes apply, as in filter_live."""
+    full, scoped, exact = _tomb_groups(table)
+    doc = F.col("doc_id")
+    ids = lambda a: [int(x) for x in a]
+    keep = ~doc.isin(ids(full)) if len(full) else F.lit(True)
+    if seg_col is not None:
+        for v, a in scoped.items():
+            keep &= ~(doc.isin(ids(a)) & (F.col(seg_col) < F.lit(v)))
+        for m, a in exact.items():
+            keep &= ~(doc.isin(ids(a)) & (F.col(seg_col) == F.lit(m)))
+    return keep
+
+
+def live_rows(index, frame: DataFrame, seg_col: str = "segment_id") -> DataFrame:
+    """``frame`` without the rows the index's tombstones kill: a literal
+    predicate while the snapshot holds at most LITERAL_TOMBSTONES rows,
+    else filter_live's anti-join.  Indexes without tombstones return
+    ``frame`` as-is."""
+    tomb = getattr(index, "_tombstones", None)
+    if tomb is None:
+        return frame
+    table = getattr(index, "_tomb_table", None)
+    if table is not None and table.num_rows <= LITERAL_TOMBSTONES:
+        return frame.filter(
+            live_predicate(table, seg_col if seg_col in frame.columns else None)
+        )
+    return filter_live(frame, tomb, seg_col)
 
 
 def filter_live(frame: DataFrame, tomb: DataFrame | None,

@@ -15,9 +15,16 @@ Reference trace (SURVEY §3.2/3.3) -> Spark shape:
   MUST_NOT (booleanScorer.go:169-183 prohibited bits)
       -> left_anti join
   TopScoreDocCollector (collect.go:193-346, tie-break :282-303)
-      -> orderBy(score desc, doc_id asc).limit(k)
-         == TakeOrderedAndProject: per-partition top-k + driver merge,
-         exactly the per-leaf-collect + docBase-merge of search.go:95-113
+      -> two placements, one order (_e6 desc, doc_id asc):
+         - Spark: collect_topk, orderBy(...).limit(k) ==
+           TakeOrderedAndProject: per-partition top-k + driver merge,
+           exactly the per-leaf-collect + docBase-merge of
+           search.go:95-113
+         - driver: a selective term/boolean query on a
+           MaterializedIndex is scored and cut to k by one Arrow/NumPy
+           kernel (search/topk.py) with no Catalyst plan and no Spark
+           job; Searcher.search picks it by the summed df of the
+           query's terms
 """
 
 from __future__ import annotations
@@ -118,11 +125,11 @@ def cursor_e6(score: float) -> int:
 def norm_bytes(index, byte=None):
     """The norm argument of the similarity's ``score_col`` / ``score_np``:
     None when the index keeps unquantized lengths (the scorer reads dlq
-    instead), else the norm_byte column, or, given one doc's ``byte``,
-    a one-element array."""
+    instead), else the norm_byte column, or, given one doc's ``byte`` or
+    an array of them, an array."""
     if not index.quantized:
         return None
-    return F.col("norm_byte") if byte is None else np.array([byte])
+    return F.col("norm_byte") if byte is None else np.atleast_1d(byte)
 
 
 def _collect_terms(q, out):
@@ -387,12 +394,9 @@ class Searcher:
             # MatchAllDocsQuery respects liveDocs (Lucene semantics):
             # doc_stats deliberately keeps tombstoned rows for the
             # maxDoc/df statistics, so the liveness filter applies HERE
-            docs = self.index.doc_stats
-            tomb = getattr(self.index, "_tombstones", None)
-            if tomb is not None:
-                from ..index.deletes import filter_live
+            from ..index.deletes import live_rows
 
-                docs = filter_live(docs, tomb)
+            docs = live_rows(self.index, self.index.doc_stats)
             return docs.select("doc_id").distinct().select(
                 "doc_id", F.lit(float(q.boost)).alias("score")
             )
@@ -852,12 +856,9 @@ class Searcher:
                 },
             }
         if isinstance(q, MatchAllQuery):
-            docs = self.index.doc_stats
-            tomb = getattr(self.index, "_tombstones", None)
-            if tomb is not None:
-                from ..index.deletes import filter_live
+            from ..index.deletes import live_rows
 
-                docs = filter_live(docs, tomb)
+            docs = live_rows(self.index, self.index.doc_stats)
             exists = docs.filter(F.col("doc_id") == doc_id).limit(1).count() > 0
             return {
                 "match": exists,
@@ -938,11 +939,21 @@ class Searcher:
         later pages via search_after() then use ONE collector order, so
         two raw scores that round to the same e6 value tie-break by
         doc_id identically on both sides of the page boundary (ADVICE
-        r4: raw-float page 1 vs e6 page 2 could skip/duplicate a hit)."""
+        r4: raw-float page 1 vs e6 page 2 could skip/duplicate a hit).
+
+        Two placements, one order: a selective term or boolean query on
+        a MaterializedIndex is scored and collected on the driver
+        (search/topk.py, no Spark job, nothing put in the plan cache);
+        every other query runs ``collect_topk`` in Spark."""
         if isinstance(query, str):
             from .parser import parse_query
 
             query = parse_query(query)
+        from .topk import driver_search
+
+        hits = driver_search(self, query, k)
+        if hits is not None:
+            return hits
         return self._planned(lambda: collect_topk(self.score_frame(query), k),
                              "topk", query, k)
 

@@ -28,11 +28,9 @@ def field_postings(index, field: str) -> DataFrame:
         return index.tf.filter(F.col("field") == field).select("term", "doc_id")
     p = index.postings.filter(F.col("field") == field)
     out = p.select("segment_id", "term", F.explode("doc_ids").alias("doc_id"))
-    if getattr(index, "_tombstones", None) is not None:
-        from ..index.deletes import filter_live
+    from ..index.deletes import live_rows
 
-        out = filter_live(out, index._tombstones)
-    return out.drop("segment_id")
+    return live_rows(index, out).drop("segment_id")
 
 
 def facet_counts(searcher, query, facet_field: str, k: int = 10,

@@ -305,11 +305,10 @@ def _wand_fused(searcher, q, k, weights, avgdl, term_blocks, blocks,
         F.col("e.dlqs").alias("dlq"),
         F.col("e.norm_bytes").alias("norm_byte"),
     )
-    index = searcher.index
-    if getattr(index, "_tombstones", None) is not None:
-        from ..index.deletes import filter_live
+    from ..index.deletes import live_rows
 
-        flat = filter_live(flat, index._tombstones)
+    index = searcher.index
+    flat = live_rows(index, flat)
     idf_map = F.create_map(*[x for kk, v in weights.items() for x in (F.lit(kk), F.lit(v))])
     score = searcher.sim.score_col(
         F.col("freq").cast("double"), F.col("dlq"), norm_bytes(index),

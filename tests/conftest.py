@@ -48,3 +48,25 @@ def spark_jobs(spark):
             jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
     return track
+
+
+@pytest.fixture
+def placement():
+    """``for where in placement():`` runs the loop body once per top-k
+    placement: ``"driver"`` answers every term/boolean search on a
+    MaterializedIndex with the driver kernel (search/topk.py),
+    ``"spark"`` sends every search to the Spark collector.  The switch
+    is the kernel's df constant, as in production; it is restored when
+    the loop ends."""
+    from golucene_spark.search import topk
+
+    def each():
+        old = topk.DRIVER_MAX_DF
+        try:
+            for where, limit in (("driver", 1 << 62), ("spark", -1)):
+                topk.DRIVER_MAX_DF = limit
+                yield where
+        finally:
+            topk.DRIVER_MAX_DF = old
+
+    return each

@@ -5,7 +5,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from golucene_spark.index import CorpusSpec, FieldSpec, LogicalIndex
+from golucene_spark.index import (CorpusSpec, FieldSpec, IndexBuilder, LogicalIndex,
+                                  MaterializedIndex)
 from golucene_spark.index import smallfloat
 from golucene_spark.search import Searcher, TermQuery
 
@@ -38,7 +39,20 @@ def _scores(spark, docs, **field_kw):
             for r in s.search(TermQuery("text", "spark"), 10).collect()}
 
 
-def test_field_boost_raises_scores(spark, docs):
+def _built_scores(spark, docs, tmp_path, placement, **field_kw):
+    """{doc_id: score} of the same search on a built MaterializedIndex,
+    checked equal under both top-k placements."""
+    ixdir = str(tmp_path / "ix")
+    IndexBuilder(spark, _spec(**field_kw), analyzer="simple", quantize_norms=False,
+                 num_segments=1).build(docs, ixdir)
+    s = Searcher(MaterializedIndex(spark, ixdir), "bm25")
+    runs = [{r["doc_id"]: r["score"] for r in s.search(TermQuery("text", "spark"), 10).collect()}
+            for _ in placement()]
+    assert runs[0] == pytest.approx(runs[1], rel=1e-12)
+    return runs[0]
+
+
+def test_field_boost_raises_scores(spark, docs, tmp_path, placement):
     base = _scores(spark, docs)
     boosted = _scores(spark, docs, boost=2.0)
     # boost shrinks the decoded length (dl/boost^2), so every score rises
@@ -53,15 +67,20 @@ def test_field_boost_raises_scores(spark, docs):
         want = idf * (k1 + 1.0) * freq / (
             freq + k1 * (1 - b + b * (dl / 4.0) / avgdl))
         assert boosted[d] == pytest.approx(want, rel=1e-12)
+    # the same norms read back from a built index
+    assert _built_scores(spark, docs, tmp_path, placement, boost=2.0) == pytest.approx(
+        boosted, rel=1e-12)
 
 
-def test_per_doc_boost_col(spark, docs):
+def test_per_doc_boost_col(spark, docs, tmp_path, placement):
     docs_b = docs.withColumn(
         "b", F.when(F.col("doc_id") == 1, F.lit(4.0)).otherwise(F.lit(1.0)))
     base = _scores(spark, docs_b)
     per_doc = _scores(spark, docs_b, boost_col="b")
     assert per_doc[1] > base[1]          # boosted doc rises
     assert per_doc[0] == base[0]         # b=1 docs unchanged
+    assert _built_scores(spark, docs_b, tmp_path, placement, boost_col="b") == pytest.approx(
+        per_doc, rel=1e-12)
     # effective boost composes: boost * boost_col
     # (0.5 * 4 = 2 -> dl/4 for doc 1; 0.5 * 1 = 0.5 -> dl*4 for others)
     composed = _scores(spark, docs_b, boost=0.5, boost_col="b")

@@ -53,7 +53,7 @@ def _segments(spark, ixdir) -> list[int]:
     return sorted(segs - dead_segments(ixdir))
 
 
-def test_lifecycle_fuzz(spark, tmp_path_factory):
+def test_lifecycle_fuzz(spark, tmp_path_factory, placement):
     import os as _os
     rng = random.Random(int(_os.environ.get("FUZZ_SEED", "7")))
     ixdir = str(tmp_path_factory.mktemp("lifecycle") / "ix")
@@ -123,9 +123,10 @@ def test_lifecycle_fuzz(spark, tmp_path_factory):
             # the marker token matches EXACTLY the updated docs' newest
             # versions — stale versions must be invisible
             s = Searcher(MaterializedIndex(spark, ixdir), "bm25")
-            hits = {r["doc_id"]
-                    for r in s.search(TermQuery("content", marker), 1000).collect()}
-            assert hits == set(targets), (marker, hits, targets)
+            for where in placement():
+                hits = {r["doc_id"]
+                        for r in s.search(TermQuery("content", marker), 1000).collect()}
+                assert hits == set(targets), (where, marker, hits, targets)
         elif op == "delete_ids":
             if not live:
                 continue
@@ -139,7 +140,10 @@ def test_lifecycle_fuzz(spark, tmp_path_factory):
             q = parse_query(f"content:{term}", default_field="content",
                             analyzer="simple")
             s = Searcher(MaterializedIndex(spark, ixdir), "bm25")
-            expected_victims = {r["doc_id"] for r in s.search(q, 100000).collect()}
+            victims = [{r["doc_id"] for r in s.search(q, 100000).collect()}
+                       for _ in placement()]
+            assert victims[0] == victims[1], term
+            expected_victims = victims[0]
             delete_by_query(spark, ixdir, q)
             for i in expected_victims:
                 live.pop(int(i), None)
@@ -170,7 +174,8 @@ def test_lifecycle_fuzz(spark, tmp_path_factory):
         # empty-expunge crash this guards)
         q = parse_query("content:parse", default_field="content",
                         analyzer="simple")
-        assert s_old.search(q, 10).count() == 0
+        for _ in placement():
+            assert s_old.search(q, 10).count() == 0
         return
 
     fresh_dir = str(tmp_path_factory.mktemp("lifecycle_fresh") / "ix")
@@ -182,8 +187,9 @@ def test_lifecycle_fuzz(spark, tmp_path_factory):
     for qs in ["content:parse", "content:buffer OR content:index",
                "content:fresh", "content:parse AND NOT content:return"]:
         q = parse_query(qs, default_field="content", analyzer="simple")
-        a = [(r["doc_id"], round(r["score"], 9))
-             for r in s_old.search(q, 50).collect()]
-        b = [(r["doc_id"], round(r["score"], 9))
-             for r in s_new.search(q, 50).collect()]
-        assert a == b, (qs, a[:5], b[:5])
+        for where in placement():
+            a = [(r["doc_id"], round(r["score"], 9))
+                 for r in s_old.search(q, 50).collect()]
+            b = [(r["doc_id"], round(r["score"], 9))
+                 for r in s_new.search(q, 50).collect()]
+            assert a == b, (where, qs, a[:5], b[:5])

@@ -85,11 +85,16 @@ def test_reopen_drops_memos(spark, mix):
     assert all(st["entries"] == 0 for st in _stats(reopened).values())
 
 
-def test_plan_memo_reuses_frames_and_keys_correctly(spark, mix):
+def test_plan_memo_reuses_frames_and_keys_correctly(spark, mix, monkeypatch):
     """The prepared-plan memo (r6): a repeated (query, k, similarity)
     returns the SAME immutable DataFrame (no rebuilt plan), every
     collect recomputes identical rows, and distinct k / similarity /
-    boost produce distinct plans."""
+    boost produce distinct plans.  Only the Spark placement prepares
+    plans; on this small index every query here would be driver-placed,
+    so the test sends them to Spark."""
+    from golucene_spark.search import topk
+
+    monkeypatch.setattr(topk, "DRIVER_MAX_DF", -1)
     q = _q("text:data OR text:table")
     f1 = Searcher(mix, "bm25").search(q, 5)
     r1 = [(r.doc_id, r.score) for r in f1.collect()]

@@ -23,7 +23,7 @@ def uix(spark, tmp_path):
     return ixdir
 
 
-def test_update_replaces_version(spark, uix):
+def test_update_replaces_version(spark, uix, placement):
     new = spark.createDataFrame(
         [(1, "beta replaced contents", "en", "web")],
         "doc_id long, text string, lang string, source string",
@@ -33,8 +33,9 @@ def test_update_replaces_version(spark, uix):
     assert rec["kind"] == "update" and rec["n_docs"] == 1
     s = Searcher(MaterializedIndex(spark, uix), "bm25")
     # old content no longer matches doc 1; new content does
-    assert {r["doc_id"] for r in s.search(TermQuery("text", "original"), 10).collect()} == {0}
-    assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
+    for _ in placement():
+        assert {r["doc_id"] for r in s.search(TermQuery("text", "original"), 10).collect()} == {0}
+        assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
     # other docs untouched
     assert s.count(TermQuery("text", "gamma")) == 1
     # document() returns the newest stored version
@@ -60,7 +61,7 @@ def test_update_then_delete_and_second_update(spark, uix):
     assert MaterializedIndex(spark, uix).document(0) is None
 
 
-def test_update_facets_and_wand_see_new_version(spark, uix):
+def test_update_facets_and_wand_see_new_version(spark, uix, placement):
     from golucene_spark.search import facet_counts
     from golucene_spark.search.wand import wand_topk
 
@@ -74,8 +75,9 @@ def test_update_facets_and_wand_see_new_version(spark, uix):
     # doc2's old (de) keyword version is superseded; its new version
     # doesn't match 'text' anymore
     assert counts == {"en": 2}
-    hits = {r["doc_id"] for r in wand_topk(s, TermQuery("text", "gamma"), 10).collect()}
-    assert hits == {2}
+    for _ in placement():
+        hits = {r["doc_id"] for r in wand_topk(s, TermQuery("text", "gamma"), 10).collect()}
+        assert hits == {2}
 
 
 def test_update_hydration_no_duplicates(spark, uix):
@@ -99,7 +101,7 @@ def test_update_hydration_no_duplicates(spark, uix):
     assert len({(r["group"], r["doc_id"]) for r in grp}) == len(grp)
 
 
-def test_plain_merge_does_not_resurrect_updated_docs(spark, uix):
+def test_plain_merge_does_not_resurrect_updated_docs(spark, uix, placement):
     """ADVICE r2 (high): plain merge relabels rows to a fresh segment id
     ABOVE every update tombstone's before_segment, which used to
     resurrect superseded versions.  The non-expunge path must apply
@@ -122,15 +124,16 @@ def test_plain_merge_does_not_resurrect_updated_docs(spark, uix):
     merge_segments(spark, uix, old_segs)
     s = Searcher(MaterializedIndex(spark, uix), "bm25")
     # stale version must stay dead; live version must survive
-    assert {r["doc_id"] for r in s.search(TermQuery("text", "original"), 10).collect()} == {0}
-    assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
+    for _ in placement():
+        assert {r["doc_id"] for r in s.search(TermQuery("text", "original"), 10).collect()} == {0}
+        assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
     # plain deletes still apply to the merged segment afterwards
     delete_docs(spark, uix, [0])
     s2 = Searcher(MaterializedIndex(spark, uix), "bm25")
     assert s2.count(TermQuery("text", "original")) == 0
 
 
-def test_plain_merge_all_segments_with_update(spark, uix):
+def test_plain_merge_all_segments_with_update(spark, uix, placement):
     """Merging old + update segments together must also keep only the
     live version."""
     from golucene_spark.index.merge import merge_segments
@@ -147,12 +150,13 @@ def test_plain_merge_all_segments_with_update(spark, uix):
     )
     merge_segments(spark, uix, segs)
     s = Searcher(MaterializedIndex(spark, uix), "bm25")
-    assert {r["doc_id"] for r in s.search(TermQuery("text", "original"), 10).collect()} == {0}
-    assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
+    for _ in placement():
+        assert {r["doc_id"] for r in s.search(TermQuery("text", "original"), 10).collect()} == {0}
+        assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
     assert s.count(TermQuery("text", "gamma")) == 1
 
 
-def test_merge_then_update_supersedes(spark, uix):
+def test_merge_then_update_supersedes(spark, uix, placement):
     """ADVICE r3 (high): merge FIRST, update AFTER.  Merged segments sit
     at MERGE_ID_BASE (10M+) which is never < a later update tombstone's
     before_segment (~2M+epoch); the scoped tombstone must be translated
@@ -173,13 +177,14 @@ def test_merge_then_update_supersedes(spark, uix):
     update_documents(spark, uix, new, spec, analyzer="simple", quantize_norms=False)
     s = Searcher(MaterializedIndex(spark, uix), "bm25")
     # exactly ONE live version of doc 1: old content dead, new content live
-    assert {r["doc_id"] for r in s.search(TermQuery("text", "original"), 10).collect()} == {0}
-    assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
+    for _ in placement():
+        assert {r["doc_id"] for r in s.search(TermQuery("text", "original"), 10).collect()} == {0}
+        assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
     assert s.count(TermQuery("text", "beta")) == 1  # not two live versions
     assert s.count(TermQuery("text", "gamma")) == 1
 
 
-def test_merge_of_merge_then_update(spark, uix):
+def test_merge_of_merge_then_update(spark, uix, placement):
     """Nested merges: tombstone translation must expand merged inputs
     transitively, and a second merge containing a prior merge must route
     through the scoped-expunge path (effective-id comparison)."""
@@ -205,7 +210,8 @@ def test_merge_of_merge_then_update(spark, uix):
     assert any(s >= 10_000_000 for s in segs2)
     merge_segments(spark, uix, segs2)
     s = Searcher(MaterializedIndex(spark, uix), "bm25")
-    assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
+    for _ in placement():
+        assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
     assert s.count(TermQuery("text", "original")) == 1  # only doc 0's
     assert s.count(TermQuery("text", "beta")) == 1
     # and a THIRD update after the nested merge still supersedes
@@ -216,11 +222,12 @@ def test_merge_of_merge_then_update(spark, uix):
     update_documents(spark, uix, v3, spec, analyzer="simple", quantize_norms=False)
     s3 = Searcher(MaterializedIndex(spark, uix), "bm25")
     assert s3.count(TermQuery("text", "replaced")) == 0
-    assert {r["doc_id"] for r in s3.search(TermQuery("text", "final"), 10).collect()} == {1}
+    for _ in placement():
+        assert {r["doc_id"] for r in s3.search(TermQuery("text", "final"), 10).collect()} == {1}
     assert s3.count(TermQuery("text", "beta")) == 1
 
 
-def test_expunge_merge_then_update(spark, uix):
+def test_expunge_merge_then_update(spark, uix, placement):
     """Same direction through the expunge path: physically merged
     segment, then an update — the update must win."""
     from golucene_spark.index.merge import merge_segments
@@ -237,5 +244,6 @@ def test_expunge_merge_then_update(spark, uix):
     )
     update_documents(spark, uix, new, spec, analyzer="simple", quantize_norms=False)
     s = Searcher(MaterializedIndex(spark, uix), "bm25")
-    assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
+    for _ in placement():
+        assert {r["doc_id"] for r in s.search(TermQuery("text", "replaced"), 10).collect()} == {1}
     assert s.count(TermQuery("text", "beta")) == 1
