@@ -40,6 +40,7 @@ import hashlib
 import json
 import math
 import os
+import threading
 import time
 from dataclasses import dataclass, field as dc_field
 
@@ -195,13 +196,17 @@ def assign_doc_ids(df: DataFrame, spec: CorpusSpec, num_segments: int) -> DataFr
     )
 
 
-def _tf_arrow_fn(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_positions: bool):
-    """mapInArrow fn: per-doc inversion (tokenize + term-freq + norms).
+def _tf_invert(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_positions: bool):
+    """Per-doc inversion (tokenize + term-freq + norms) of one Arrow
+    batch: ``invert(rb)`` yields the batch's TF record batches.
 
-    Pure function of its batch — safe to re-run (resume), no driver state.
-    Emits one row per (doc, field, term) plus a '__doc__' sentinel row per
-    (doc, text field) carrying length + a Python-side sha256 of the text
-    (cross-checked against the JVM-side sha2 in doc_meta by verify_index).
+    Pure function of its batch, with no process-wide side effects: the
+    mapInArrow stage (``_tf_arrow_fn``) runs it on the workers and the
+    in-process NRT flush runs it on the driver.  Emits one row per
+    (doc, field, term) plus a '__doc__' sentinel row per (doc, text
+    field) carrying length + a Python-side sha256 of the text
+    (cross-checked against the JVM-side sha2 in doc_meta by
+    verify_index).
 
     Output batches are assembled directly as Arrow arrays from the NumPy
     reduce results (pa.ListArray.from_arrays for positions) — no per-
@@ -266,27 +271,20 @@ def _tf_arrow_fn(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_pos
     # reusable pool instead of faulting in batch-sized temporaries.
     slice_rows = int(os.environ.get("GOLUCENE_TF_SLICE_ROWS", "2048"))
 
-    def fn(batches):
-        # post-fork hygiene (once per worker process): pyspark workers
-        # are forked from a daemon; cyclic GC writing to inherited
-        # object headers triggers a COW storm that this VM's kernel
-        # serializes.  Freeze the inherited heap so GC never touches it.
-        import gc
+    analyzers: dict = {}  # built on first use, in the process that inverts
 
-        if not globals().get("_GC_FROZEN"):
-            gc.freeze()
-            globals()["_GC_FROZEN"] = True
-        analyzers = {
-            fname: get_analyzer(f_ana or analyzer_name)
-            for fname, _c, _p, _o, f_ana, _b, _bc, _pl in text_fields
-        }
-        for rb0 in batches:
-            for off in range(0, rb0.num_rows, slice_rows) or [0]:
-                rb = rb0.slice(off, slice_rows)
-                n = rb.num_rows
-                if n == 0:
-                    continue
-                yield from _one(rb, n, analyzers)
+    def invert(rb0):
+        if not analyzers:
+            analyzers.update({
+                fname: get_analyzer(f_ana or analyzer_name)
+                for fname, _c, _p, _o, f_ana, _b, _bc, _pl in text_fields
+            })
+        for off in range(0, rb0.num_rows, slice_rows) or [0]:
+            rb = rb0.slice(off, slice_rows)
+            n = rb.num_rows
+            if n == 0:
+                continue
+            yield from _one(rb, n, analyzers)
 
     def _one(rb, n, analyzers):
             cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
@@ -405,12 +403,35 @@ def _tf_arrow_fn(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_pos
                         np.full(m, 124),  # encode(1.0)
                     )
 
+    invert.schema = pa_schema
+    return invert
+
+
+def _tf_arrow_fn(spec: CorpusSpec, analyzer_name: str, quantize: bool, index_positions: bool):
+    """mapInArrow fn: ``_tf_invert`` over the stage's batches, plus the
+    worker-only post-fork GC hygiene.  Never call it on the driver:
+    ``gc.freeze()`` there would pin every live driver object, py4j
+    JavaObject cycles that are garbage but not yet collected included,
+    so their JVM objects would never be freed."""
+    invert = _tf_invert(spec, analyzer_name, quantize, index_positions)
+
+    def fn(batches):
+        # post-fork hygiene (once per worker process): pyspark workers
+        # are forked from a daemon; cyclic GC writing to inherited
+        # object headers triggers a COW storm that this VM's kernel
+        # serializes.  Freeze the inherited heap so GC never touches it.
+        import gc
+
+        if not globals().get("_GC_FROZEN"):
+            gc.freeze()
+            globals()["_GC_FROZEN"] = True
+        for rb in batches:
+            yield from invert(rb)
+
     return fn
 
 
-def tokenize_tf(docs: DataFrame, spec: CorpusSpec, analyzer: str = "standard",
-                quantize: bool = True, index_positions: bool = True) -> DataFrame:
-    """docs (with doc_id, segment_id) -> flat TF rows (incl. sentinels)."""
+def _check_payload_analyzers(spec: CorpusSpec, analyzer: str) -> None:
     for f in spec.text_fields:
         if getattr(f, "payloads", False):
             eff = getattr(f, "analyzer", None) or analyzer
@@ -421,6 +442,12 @@ def tokenize_tf(docs: DataFrame, spec: CorpusSpec, analyzer: str = "standard",
                     "tokenize the '|' payload delimiter away before the "
                     "DelimitedPayload split can see it"
                 )
+
+
+def tokenize_tf(docs: DataFrame, spec: CorpusSpec, analyzer: str = "standard",
+                quantize: bool = True, index_positions: bool = True) -> DataFrame:
+    """docs (with doc_id, segment_id) -> flat TF rows (incl. sentinels)."""
+    _check_payload_analyzers(spec, analyzer)
     cols = ["segment_id", "doc_id"] + sorted(
         {f.column for f in spec.text_fields}
         | {f.column for f in spec.keyword_fields}
@@ -564,6 +591,159 @@ def blocked_postings(tf: DataFrame, block_size: int = BLOCK_SIZE,
         )
     return out
 
+
+def _list_of(offsets, values, nullable: bool):
+    return pa.ListArray.from_arrays(
+        offsets, values, type=pa.list_(pa.field("element", values.type, nullable)))
+
+
+def blocked_postings_arrow(tf: "pa.Table", block_size: int = BLOCK_SIZE,
+                           include_sentinels: bool = False,
+                           wand_metadata: bool = False) -> "pa.Table":
+    """The Arrow/NumPy twin of ``blocked_postings`` (without salting):
+    flat TF rows -> the same 128-doc posting blocks, row for row and
+    column for column (``kind`` included), sorted by (segment_id, field,
+    term, block_id).  One sort, then every block column is a reduceat
+    over the block starts; the in-process NRT flush runs it on the
+    driver."""
+    import pyarrow.compute as pc
+
+    if not include_sentinels:
+        tf = tf.filter(pc.invert(pc.starts_with(tf["field"], DOC_SENTINEL_FIELD)))
+    tf = tf.sort_by([("segment_id", "ascending"), ("field", "ascending"),
+                     ("term", "ascending"), ("doc_id", "ascending")]).combine_chunks()
+    n = tf.num_rows
+    col = lambda c: tf[c].chunk(0) if tf[c].num_chunks else pa.array([], tf[c].type)
+    # a row starts a (segment, field, term) group when any key changes
+    seg = col("segment_id").to_numpy()
+    same = np.zeros(n, dtype=bool)
+    same[1:] = seg[1:] == seg[:-1]
+    for c in ("field", "term"):
+        codes = pc.fill_null(col(c).dictionary_encode().indices, -1).to_numpy()
+        same[1:] &= codes[1:] == codes[:-1]
+    starts = np.flatnonzero(~same)
+    group = np.cumsum(~same) - 1
+    rank = np.arange(n) - starts[group]
+    bs = np.flatnonzero(rank % block_size == 0)  # block starts
+    lens = np.diff(np.append(bs, n))
+    bg = group[bs]
+    freq, dlq, doc = (col(c).to_numpy() for c in ("freq", "dlq", "doc_id"))
+    df = np.diff(np.append(starts, n))
+    ttf = np.add.reduceat(freq.astype(np.int64), starts)
+    bmf = np.maximum.reduceat(freq, bs)
+    offsets = pa.array(np.append(bs, n).astype(np.int32))
+    field = col("field").take(pa.array(bs))
+    out = {
+        "segment_id": pa.array(seg[bs], pa.int32()),
+        "field": field,
+        "term": col("term").take(pa.array(bs)),
+        "df_seg": pa.array(df[bg], pa.int64()),
+        "ttf_seg": pa.array(ttf[bg], pa.int64()),
+        "n_buckets": pa.array(np.ones(len(bs), dtype=np.int64)),
+        "block_id": pa.array((rank[bs] // block_size).astype(np.int64)),
+        "doc_ids": _list_of(offsets, col("doc_id"), False),
+        "freqs": _list_of(offsets, col("freq"), False),
+        "dlqs": _list_of(offsets, col("dlq"), False),
+        "norm_bytes": _list_of(offsets, col("norm_byte"), False),
+        "positions": _list_of(offsets, col("positions"), True),
+    }
+    if "payloads" in tf.column_names:
+        out["payloads"] = _list_of(offsets, col("payloads"), True)
+    out["block_len"] = pa.array(lens.astype(np.int32))
+    out["block_max_freq"] = pa.array(bmf.astype(np.int32))
+    out["block_min_dlq"] = pa.array(np.minimum.reduceat(dlq, bs), pa.float64())
+    if wand_metadata:
+        out["block_max_dlq"] = pa.array(np.maximum.reduceat(dlq, bs), pa.float64())
+    out["block_first_doc"] = pa.array(doc[bs], pa.int64())
+    out["block_last_doc"] = pa.array(doc[bs + lens - 1], pa.int64())
+    out["kind"] = pc.if_else(pc.starts_with(field, DOC_SENTINEL_FIELD), "doc", "post")
+    if wand_metadata:
+        out["block_max_freq_cnt"] = pa.array(np.add.reduceat(
+            (freq == np.repeat(bmf, lens)).astype(np.int32), bs), pa.int32())
+    return pa.table(out)
+
+
+def term_dict_frame(written: DataFrame) -> DataFrame:
+    """term_dict rows of written posting blocks (their kind=post rows):
+    per (segment, field, term) df/ttf, singleton pulsing
+    (postingsWriter.go:388-392: a df==1 term carries its only doc inline
+    in the dictionary) and the block-metadata spread that lets WAND
+    detect degenerate (uniform upper-bound) terms from the term stats
+    it already reads."""
+    return (
+        written.filter(F.col("kind") == "post")
+        .groupBy("segment_id", "field", "term")
+        .agg(
+            F.max("df_seg").alias("df"),
+            F.max("ttf_seg").alias("ttf"),
+            F.when(F.max("df_seg") == 1, F.min(F.element_at("doc_ids", 1))).alias("pulsed_doc"),
+            F.when(F.max("df_seg") == 1, F.min(F.element_at("freqs", 1))).alias("pulsed_freq"),
+            F.min("block_max_freq").alias("bmf_min"),
+            F.max("block_max_freq").alias("bmf_max"),
+            F.min("block_min_dlq").alias("bdlq_min"),
+            F.max("block_min_dlq").alias("bdlq_max"),
+        )
+    )
+
+
+def term_dict_arrow(post: "pa.Table") -> "pa.Table":
+    """The Arrow twin of ``term_dict_frame`` over
+    ``blocked_postings_arrow``'s kind=post blocks, where each term's
+    blocks are contiguous and start at block_id 0."""
+    first = np.flatnonzero(post["block_id"].to_numpy() == 0)
+    at = lambda c: post[c].to_numpy()[first]
+    spread = lambda c, fn: fn.reduceat(post[c].to_numpy(), first)
+    df = at("df_seg")
+    single = df != 1
+    return pa.table({
+        "segment_id": pa.array(at("segment_id"), pa.int32()),
+        "field": post["field"].take(pa.array(first)),
+        "term": post["term"].take(pa.array(first)),
+        "df": pa.array(df, pa.int64()),
+        "ttf": pa.array(at("ttf_seg"), pa.int64()),
+        "pulsed_doc": pa.array(at("block_first_doc"), pa.int64(), mask=single),
+        "pulsed_freq": pa.array(at("block_max_freq"), pa.int32(), mask=single),
+        "bmf_min": pa.array(spread("block_max_freq", np.minimum), pa.int32()),
+        "bmf_max": pa.array(spread("block_max_freq", np.maximum), pa.int32()),
+        "bdlq_min": pa.array(spread("block_min_dlq", np.minimum), pa.float64()),
+        "bdlq_max": pa.array(spread("block_min_dlq", np.maximum), pa.float64()),
+    })
+
+
+def doc_stats_arrow(doc_blocks: "pa.Table") -> "pa.Table":
+    """doc_stats rows of kind=doc sentinel blocks: the Arrow twin of
+    ``_explode_doc_sentinels`` (one row per doc, identical texts in a
+    segment included)."""
+    import pyarrow.compute as pc
+
+    parent = pc.list_parent_indices(doc_blocks["doc_ids"])
+    flat = lambda c: pc.list_flatten(doc_blocks[c])
+    return pa.table({
+        "segment_id": doc_blocks["segment_id"].take(parent),
+        "doc_id": flat("doc_ids"),
+        "field": pc.utf8_slice_codeunits(doc_blocks["field"], len(DOC_SENTINEL_FIELD)).take(parent),
+        "length": flat("freqs"),
+        "norm_byte": flat("norm_bytes"),
+        "dlq": flat("dlqs"),
+        "content_sha256": doc_blocks["term"].take(parent),
+    })
+
+
+def term_vectors_arrow(post: "pa.Table") -> "pa.Table":
+    """The term-vectors rows of kind=post blocks, doc-major: the Arrow
+    twin of ``write_term_vectors_chunk``'s relayout."""
+    import pyarrow.compute as pc
+
+    parent = pc.list_parent_indices(post["doc_ids"])
+    flat = lambda c: pc.list_flatten(post[c])
+    return pa.table({
+        "segment_id": post["segment_id"].take(parent),
+        "doc_id": flat("doc_ids"),
+        "field": post["field"].take(parent),
+        "term": post["term"].take(parent),
+        "freq": flat("freqs"),
+        "positions": flat("positions"),
+    }).sort_by([("doc_id", "ascending"), ("field", "ascending"), ("term", "ascending")])
 
 def _collect_term_ranges(spark: SparkSession, index_dir: str,
                          chunk: int | str) -> dict | None:
@@ -764,16 +944,8 @@ class IndexBuilder:
         return os.path.join(index_dir, "manifest")
 
     def _committed_chunks(self, index_dir) -> dict[int, dict]:
-        d = self._manifest_dir(index_dir)
-        out = {}
-        if os.path.isdir(d):
-            for fn in sorted(os.listdir(d)):
-                if fn.endswith(".json"):
-                    with open(os.path.join(d, fn)) as f:
-                        rec = json.load(f)
-                    if rec.get("status") == "committed":
-                        out[rec["chunk"]] = rec
-        return out
+        return {rec["chunk"]: rec for rec in read_manifest(index_dir)
+                if rec.get("status") == "committed"}
 
     def _commit_chunk(self, index_dir, rec: dict):
         d = self._manifest_dir(index_dir)
@@ -881,8 +1053,8 @@ class IndexBuilder:
                 )
                 return {
                     int(r["segment_id"]): int(r["cnt"])
-                    for r in self.spark.read.parquet(
-                        os.path.join(index_dir, "doc_meta", f"chunk={chunk}")
+                    for r in read_table(
+                        self.spark, os.path.join(index_dir, "doc_meta", f"chunk={chunk}")
                     ).groupBy("segment_id").agg(
                         F.countDistinct("doc_id").alias("cnt")
                     ).collect()
@@ -901,28 +1073,10 @@ class IndexBuilder:
                 meta_fut = pool.submit(_timed, "doc_meta_write", _write_doc_meta)
                 _timed("postings_write", _write_postings)
 
-                written = self.spark.read.parquet(
-                    os.path.join(index_dir, "postings", f"chunk={chunk}")
+                written = read_table(
+                    self.spark, os.path.join(index_dir, "postings", f"chunk={chunk}")
                 )
-                td = (
-                    written.filter(F.col("kind") == "post")
-                    .groupBy("segment_id", "field", "term")
-                    .agg(
-                        F.max("df_seg").alias("df"),
-                        F.max("ttf_seg").alias("ttf"),
-                        # singleton pulsing (postingsWriter.go:388-392): df==1
-                        # terms carry their only doc inline in the dictionary
-                        F.when(F.max("df_seg") == 1, F.min(F.element_at("doc_ids", 1))).alias("pulsed_doc"),
-                        F.when(F.max("df_seg") == 1, F.min(F.element_at("freqs", 1))).alias("pulsed_freq"),
-                        # block-metadata spread: lets WAND detect degenerate
-                        # (uniform upper-bound) terms from the term_stats
-                        # collect it already does — zero extra jobs
-                        F.min("block_max_freq").alias("bmf_min"),
-                        F.max("block_max_freq").alias("bmf_max"),
-                        F.min("block_min_dlq").alias("bdlq_min"),
-                        F.max("block_min_dlq").alias("bdlq_max"),
-                    )
-                )
+                td = term_dict_frame(written)
 
                 def _write_term_dict():
                     (td.sortWithinPartitions("field", "term")
@@ -978,8 +1132,8 @@ class IndexBuilder:
         write_field_stats(
             index_dir,
             field_stats_rows(
-                self.spark.read.parquet(os.path.join(index_dir, "doc_stats")),
-                self.spark.read.parquet(os.path.join(index_dir, "term_dict")),
+                read_table(self.spark, os.path.join(index_dir, "doc_stats")),
+                read_table(self.spark, os.path.join(index_dir, "term_dict")),
                 metrics["docs"],
             ),
             _omit_norms(self.spec),
@@ -1062,24 +1216,36 @@ class LogicalIndex:
         return self.snapshot_cache.get("collection", field, compute)
 
 
-def dead_segments(index_dir: str) -> set[int]:
-    """Segment ids superseded by merge records in the manifest.
+def read_manifest(index_dir: str) -> list[dict]:
+    """The manifest's records (one JSON file each: build chunks, NRT and
+    update flushes, merges, tombstone generations, the trigram table),
+    in file-name order; [] for an index without a manifest."""
+    mdir = os.path.join(index_dir, "manifest")
+    if not os.path.isdir(mdir):
+        return []
+    out = []
+    for fn in sorted(os.listdir(mdir)):
+        if fn.endswith(".json"):
+            with open(os.path.join(mdir, fn)) as f:
+                out.append(json.load(f))
+    return out
+
+
+def dead_segments(index_dir: str, records: list[dict] | None = None) -> set[int]:
+    """Segment ids superseded by merge records in the manifest
+    (``records``: the manifest already read, else it is read here).
 
     Order-independent: a segment is dead iff SOME merge consumed it.
     (_allocate_segment_id guarantees a merge's output id is never among
     its own inputs, so no per-record discard is needed — a discard keyed
     on manifest listing order would resurrect a merge output that a
     later merge consumed, duplicating every doc it holds.)"""
-    dead: set[int] = set()
-    mdir = os.path.join(index_dir, "manifest")
-    if os.path.isdir(mdir):
-        for fn in os.listdir(mdir):
-            if fn.endswith(".json"):
-                with open(os.path.join(mdir, fn)) as f:
-                    rec = json.load(f)
-                if rec.get("kind") == "merge":
-                    dead.update(int(s) for s in rec.get("merged_from_segments", []))
-    return dead
+    return {
+        int(s)
+        for rec in (read_manifest(index_dir) if records is None else records)
+        if rec.get("kind") == "merge"
+        for s in rec.get("merged_from_segments", [])
+    }
 
 
 def _arrow_dataset(path):
@@ -1099,6 +1265,52 @@ def _arrow_dataset(path):
     # Spark writes differently before and after a merge
     schema = pa.unify_schemas([f.physical_schema for f in frags])
     return ds.FileSystemDataset(frags, schema, d.format, d.filesystem)
+
+
+# session confs read_table holds while Spark lists a table: list on the
+# driver however many directories the table spans (Spark lists more
+# than parallelPartitionDiscovery.threshold paths with a job), and keep
+# the listing out of the session's shared file-status cache (each read
+# lists under a fresh cache client, so its entries are never hit again
+# and only leave at the cache's 250 MB bound: every reopen would grow
+# the driver heap)
+_READ_CONF = {
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(1 << 30),
+    "spark.sql.hive.manageFilesourcePartitions": "false",
+}
+_READ_LOCK = threading.Lock()
+
+
+def read_table(spark: SparkSession, path: str, dataset=None) -> DataFrame:
+    """``spark.read.parquet(path)`` of an index table without a Spark
+    job: the data schema is the Arrow union of the files' footers
+    (``dataset``, else ``_arrow_dataset(path)``: what mergeSchema
+    infers, read on the driver) instead of Spark's footer-reading
+    inference job, and Spark lists the files under ``_READ_CONF``.
+    Partition columns (chunk, kind, gen) are still inferred by Spark
+    from the directory names.  A table without data files, or a column
+    type Spark cannot take from Arrow, falls back to the inferring
+    read."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    d = _arrow_dataset(path) if dataset is None else dataset
+    reader = spark.read.option("mergeSchema", "true")
+    if d is not None:
+        try:
+            reader = spark.read.schema(from_arrow_schema(d.schema))
+        except TypeError:
+            pass
+    # the file index reads the confs when it lists, i.e. in this call;
+    # the lock keeps concurrent reads from restoring each other's values
+    with _READ_LOCK:
+        old = {k: spark.conf.get(k) for k in _READ_CONF}
+        for k, v in _READ_CONF.items():
+            spark.conf.set(k, v)
+        try:
+            return reader.parquet(path)
+        finally:
+            for k, v in old.items():
+                spark.conf.set(k, v)
 
 
 def read_field_stats(index_dir: str) -> dict[str, dict]:
@@ -1124,14 +1336,7 @@ def _omit_norms(spec) -> set[str]:
 def omit_norms_fields(index_dir: str) -> set[str]:
     """The omitNorms fields the manifest's build/NRT records declare
     (a merge has no spec to read them from)."""
-    out: set[str] = set()
-    mdir = os.path.join(index_dir, "manifest")
-    if os.path.isdir(mdir):
-        for fn in os.listdir(mdir):
-            if fn.endswith(".json"):
-                with open(os.path.join(mdir, fn)) as f:
-                    out.update(json.load(f).get("omit_norms_fields", ()))
-    return out
+    return {f for rec in read_manifest(index_dir) for f in rec.get("omit_norms_fields", ())}
 
 
 def field_stats_rows(doc_stats: DataFrame, term_dict: DataFrame, max_doc: int) -> list[dict]:
@@ -1233,31 +1438,32 @@ class MaterializedIndex:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        # mergeSchema: mixed old/new chunks (e.g. pre-/post-WAND-metadata,
-        # merge outputs) must resolve to the UNION schema deterministically,
-        # not to whichever file Spark happens to sample first.
-        self.postings = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(index_dir, "postings")
-        )
-        if "kind" in self.postings.columns:
-            self.postings = self.postings.filter(F.col("kind") == "post").drop("kind")
-        self.term_dict = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(index_dir, "term_dict")
-        )
-        self.doc_stats = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
-        self.doc_meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
+        # each table's schema is the Arrow union of its files' footers,
+        # the schema mergeSchema resolves for mixed old/new chunks
+        # (pre-/post-WAND-metadata, merge outputs), read on the driver:
+        # opening a snapshot starts no Spark job (read_table)
+        table = lambda name, d=None: read_table(spark, os.path.join(index_dir, name), d)
         # driver-side terms index (the .tip/.tim seek role): the same
         # term_dict files, listed once at open — this listing IS the
-        # snapshot, like spark.read.parquet's listing above
+        # snapshot, like spark.read.parquet's listing below
         self._term_dict_ds = _arrow_dataset(os.path.join(index_dir, "term_dict"))
+        self.postings = table("postings")
+        if "kind" in self.postings.columns:
+            self.postings = self.postings.filter(F.col("kind") == "post").drop("kind")
+        self.term_dict = table("term_dict", self._term_dict_ds)
+        self.doc_stats = table("doc_stats")
+        self.doc_meta = table("doc_meta")
         # the kind=post posting files, the driver top-k kernel's source
         post_files = _posting_files(index_dir)
         self._postings_ds = _arrow_dataset(
             [os.path.join(index_dir, f) for f in post_files]
         ) if post_files else None
-        self._dead = sorted(int(x) for x in dead_segments(index_dir))
+        records = read_manifest(index_dir)
+        self._dead = sorted(int(x) for x in dead_segments(index_dir, records))
         if self._dead:
-            alive = lambda df: df.filter(~F.col("segment_id").isin(self._dead))
+            # one SQL expression, not one py4j call per dead segment id
+            live = F.expr(f"segment_id NOT IN ({', '.join(map(str, self._dead))})")
+            alive = lambda df: df.filter(live)
             self.postings = alive(self.postings)
             self.term_dict = alive(self.term_dict)
             self.doc_stats = alive(self.doc_stats)
@@ -1266,43 +1472,33 @@ class MaterializedIndex:
         # numDocs vs maxDoc semantics)
         from .deletes import tombstone_table, tombstones as _tombstones
 
-        self._tombstones = _tombstones(spark, index_dir)
+        self._tombstones = _tombstones(spark, index_dir, records)
         # the same tombstones read with Arrow: the kernel's liveness mask
         # and the Spark plans' literal liveness predicate
-        self._tomb_table = tombstone_table(index_dir)
+        self._tomb_table = tombstone_table(index_dir, records)
         # optional trigram side table (sublinear seek for prefix-less
         # wildcard/regexp patterns); None when absent or stale
         from .trigram import load_trigram_index
 
         self.trigram = load_trigram_index(spark, index_dir)
         self.last_multiterm_stats: dict | None = None
-        # one manifest pass: quantize_norms (from a record that actually
-        # carries it — merge/tombstone records don't) + file-level term
-        # ranges (the .tip role: range_layout builds record per-file
-        # [min_term, max_term]; pruning is enabled only when EVERY data
-        # chunk carries ranges, else full scan)
-        self.quantized = True
+        # quantize_norms (from a record that actually carries it —
+        # merge/tombstone records don't) + file-level term ranges (the
+        # .tip role: range_layout builds record per-file [min_term,
+        # max_term]; pruning is enabled only when EVERY data chunk
+        # carries ranges, else full scan)
+        self.quantized = bool(next(
+            (r["quantize_norms"] for r in records if "quantize_norms" in r), True))
         self._term_ranges: dict[str, list] = {}
         ranges_ok = True
-        saw_quant = False
-        mdir = os.path.join(index_dir, "manifest")
-        if os.path.isdir(mdir):
-            import json as _json
-            for fn in sorted(os.listdir(mdir)):
-                if not fn.endswith(".json"):
-                    continue
-                with open(os.path.join(mdir, fn)) as f:
-                    rec = _json.load(f)
-                if not saw_quant and "quantize_norms" in rec:
-                    self.quantized = bool(rec["quantize_norms"])
-                    saw_quant = True
-                if rec.get("kind") == "delete":
-                    continue
-                tr = rec.get("term_ranges")
-                if tr:
-                    self._term_ranges.update(tr)
-                else:
-                    ranges_ok = False
+        for rec in records:
+            if rec.get("kind") == "delete":
+                continue
+            tr = rec.get("term_ranges")
+            if tr:
+                self._term_ranges.update(tr)
+            else:
+                ranges_ok = False
         self._prune_files = ranges_ok and bool(self._term_ranges)
         self.last_prune_stats: tuple | None = None
         self._field_stats = read_field_stats(index_dir)
@@ -1511,7 +1707,7 @@ class MaterializedIndex:
             raise ValueError(
                 "index was built without store_term_vectors=True"
             )
-        tv = self.spark.read.parquet(path)
+        tv = read_table(self.spark, path)
         if field is not None:
             tv = tv.filter(F.col("field") == field)
         if doc_ids is not None:

@@ -98,7 +98,8 @@ def _append_tombstones(index_dir: str, doc_ids, info: dict,
     return rec
 
 
-def tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
+def tombstones(spark: SparkSession, index_dir: str,
+               records: list[dict] | None = None) -> DataFrame | None:
     """(doc_id, before_segment, exact_segment):
 
     - before_segment NULL (and exact NULL) kills every version of the
@@ -114,26 +115,30 @@ def tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
       (A merged segment whose inputs straddle V cannot exist with live
       stale versions: merge_segments routes such merges through the
       scoped-expunge path, which applies the then-existing scoped
-      tombstones physically.)"""
+      tombstones physically.)
+
+    ``records``: the manifest already read, else it is read here."""
+    from .builder import read_table
+
     d = _tombstone_dir(index_dir)
     if not os.path.isdir(d):
         return None
-    t = spark.read.option("mergeSchema", "true").parquet(d)
+    t = read_table(spark, d)
     if "before_segment" not in t.columns:  # pre-update-era tombstones
         t = t.withColumn("before_segment", F.lit(None).cast("long"))
     t = t.select("doc_id", "before_segment").distinct()
     t = t.withColumn("exact_segment", F.lit(None).cast("long"))
     from .merge import merged_origin_ranges
 
-    origin = merged_origin_ranges(index_dir)
+    origin = merged_origin_ranges(index_dir, records)
     if origin:
         # a literal inline table: a createDataFrame(<list>) here would put
-        # a Python-worker RDD scan into every query plan on the index
-        m = spark.range(1).select(F.inline(F.array(*(
-            F.struct(F.lit(int(k)).cast("long").alias("m_seg"),
-                     F.lit(int(v[1])).cast("long").alias("m_maxorig"))
+        # a Python-worker RDD scan into every query plan on the index;
+        # written as one SQL expression, not one py4j call per literal
+        m = spark.range(1).selectExpr("inline(array({}))".format(", ".join(
+            f"named_struct('m_seg', {int(k)}L, 'm_maxorig', {int(v[1])}L)"
             for k, v in origin.items()
-        ))))
+        )))
         scoped = t.filter(F.col("before_segment").isNotNull())
         exact = scoped.join(
             F.broadcast(m), scoped["before_segment"] > m["m_maxorig"]
@@ -144,7 +149,7 @@ def tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     return t
 
 
-def tombstone_table(index_dir: str):
+def tombstone_table(index_dir: str, records: list[dict] | None = None):
     """The snapshot's tombstones as an Arrow table (doc_id,
     before_segment, exact_segment) with ``tombstones()``'s rows, read
     on the driver, or None when the index has none.  The exact_segment
@@ -170,7 +175,7 @@ def tombstone_table(index_dir: str):
         "exact_segment": pa.nulls(n, pa.int64()),
     })
     parts = [base]
-    for m, (_, maxorig) in merged_origin_ranges(index_dir).items():
+    for m, (_, maxorig) in merged_origin_ranges(index_dir, records).items():
         hit = base.filter(pc.field("before_segment") > maxorig)
         parts.append(hit.set_column(2, "exact_segment",
                                     pa.array([int(m)] * len(hit), pa.int64())))
@@ -214,15 +219,14 @@ def live_predicate(table, seg_col: str | None = "segment_id"):
     a tombstone_table: no join, no broadcast.  Without a ``seg_col``
     only full deletes apply, as in filter_live."""
     full, scoped, exact = _tomb_groups(table)
-    doc = F.col("doc_id")
-    ids = lambda a: [int(x) for x in a]
-    keep = ~doc.isin(ids(full)) if len(full) else F.lit(True)
+    # one SQL expression: a Column per literal id would cost one py4j
+    # round trip each, every time a plan is built
+    ids = lambda a: ", ".join(str(int(x)) for x in a)
+    keep = [f"doc_id NOT IN ({ids(full)})"] if len(full) else ["TRUE"]
     if seg_col is not None:
-        for v, a in scoped.items():
-            keep &= ~(doc.isin(ids(a)) & (F.col(seg_col) < F.lit(v)))
-        for m, a in exact.items():
-            keep &= ~(doc.isin(ids(a)) & (F.col(seg_col) == F.lit(m)))
-    return keep
+        keep += [f"NOT (doc_id IN ({ids(a)}) AND `{seg_col}` < {v})" for v, a in scoped.items()]
+        keep += [f"NOT (doc_id IN ({ids(a)}) AND `{seg_col}` = {m})" for m, a in exact.items()]
+    return F.expr(" AND ".join(keep))
 
 
 def live_rows(index, frame: DataFrame, seg_col: str = "segment_id") -> DataFrame:
@@ -272,35 +276,24 @@ def filter_live(frame: DataFrame, tomb: DataFrame | None,
 
 def update_documents(spark: SparkSession, index_dir: str, df: DataFrame,
                      spec, analyzer: str = "standard",
-                     quantize_norms: bool = True) -> dict:
+                     quantize_norms: bool = True) -> dict | None:
     """IndexWriter.UpdateDocuments (writer.go's delete-then-add): flush
     ``df`` (keyed by spec.id_col) as a NEW segment, then tombstone
     every PRIOR version of those ids (before_segment = the new
     segment), so readers see exactly the new versions — Lucene's
-    update visibility, without rewriting any old segment."""
-    import json as _json
-
-    from ..streaming.nrt import incremental_index_batch
+    update visibility, without rewriting any old segment.  An empty
+    ``df`` commits nothing and returns None."""
+    from ..streaming.nrt import _flush_batch
+    from .builder import read_manifest
 
     assert spec.id_col, "update_documents requires a stable id column"
-    mdir = os.path.join(index_dir, "manifest")
-    epoch = 0
-    if os.path.isdir(mdir):
-        for fn in os.listdir(mdir):
-            if fn.endswith(".json"):
-                with open(os.path.join(mdir, fn)) as f:
-                    rec = _json.load(f)
-                if rec.get("kind") in ("stream", "update"):
-                    epoch = max(epoch, int(rec.get("epoch", 0)) + 1)
-    rec = incremental_index_batch(
-        df, epoch, index_dir, spec, analyzer, quantize_norms, kind="update"
-    )
-    # the flushed chunk's doc_meta holds exactly the updated ids
-    from .builder import _arrow_dataset
-
-    ids = _arrow_dataset(
-        os.path.join(index_dir, "doc_meta", f"chunk={rec['chunk']}")
-    ).to_table(columns=["doc_id"]).column("doc_id").to_pylist()
+    epoch = max((int(rec.get("epoch", 0)) + 1 for rec in read_manifest(index_dir)
+                 if rec.get("kind") in ("stream", "update")), default=0)
+    flushed = _flush_batch(df, epoch, index_dir, spec, analyzer, quantize_norms,
+                           kind="update")
+    if flushed is None:
+        return None
+    rec, ids = flushed
     _append_tombstones(
         index_dir, ids, {"kind": "delete", "reason": "update"},
         before_segment=rec["segment_id"],

@@ -26,6 +26,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .builder import read_manifest, read_table, term_dict_frame
+
 MAX_MERGE_AT_ONCE = 10        # merge.go:370
 SEGS_PER_TIER = 10            # merge.go:377
 FLOOR_SEGMENT_DOCS = 1024     # analogue of the 2MB floor (merge.go:372)
@@ -80,27 +82,26 @@ def _strip_chunk(df: DataFrame) -> DataFrame:
     return df.drop("chunk") if "chunk" in df.columns else df
 
 
-def merged_origin_ranges(index_dir: str) -> dict[int, tuple[int, int]]:
+def _merge_children(records: list[dict]) -> dict[int, list[int]]:
+    """merge output segment id -> its input segment ids."""
+    return {
+        int(rec["new_segment_id"]): [int(s) for s in rec.get("merged_from_segments", [])]
+        for rec in records
+        if rec.get("kind") == "merge" and rec.get("new_segment_id") is not None
+    }
+
+
+def merged_origin_ranges(index_dir: str,
+                         records: list[dict] | None = None) -> dict[int, tuple[int, int]]:
     """new_segment_id -> (min, max) over the ORIGINAL (pre-merge)
-    segment ids the merged segment transitively contains.
+    segment ids the merged segment transitively contains (``records``:
+    the manifest already read, else it is read here).
 
     Merged ids (MERGE_ID_BASE+) are labels outside the epoch-ordered id
     space, so any ordinal test against an epoch-derived segment id
     (update-tombstone scoping, merge routing) must be made on these
     effective original ids instead."""
-    mdir = os.path.join(index_dir, "manifest")
-    if not os.path.isdir(mdir):
-        return {}
-    children: dict[int, list[int]] = {}
-    for fn in os.listdir(mdir):
-        if not fn.endswith(".json"):
-            continue
-        with open(os.path.join(mdir, fn)) as f:
-            rec = json.load(f)
-        if rec.get("kind") == "merge" and rec.get("new_segment_id") is not None:
-            children[int(rec["new_segment_id"])] = [
-                int(s) for s in rec.get("merged_from_segments", [])
-            ]
+    children = _merge_children(read_manifest(index_dir) if records is None else records)
 
     def expand(s: int, seen: set[int]) -> list[int]:
         if s in children and s not in seen:
@@ -145,17 +146,12 @@ def _used_segment_ids(index_dir: str, segment_ids: list[int],
     used.update(int(s) for s in segment_ids)
     keys = ("segment_id", "new_segment_id") if exact_only else (
         "segment_id", "new_segment_id", "num_segments")
-    mdir = os.path.join(index_dir, "manifest")
-    if os.path.isdir(mdir):
-        for fn in os.listdir(mdir):
-            if fn.endswith(".json"):
-                with open(os.path.join(mdir, fn)) as f:
-                    rec = json.load(f)
-                used.update(int(s) for s in (rec.get("segments") or {}))
-                for k in keys:
-                    if rec.get(k) is not None:
-                        used.add(int(rec[k]))
-                used.update(int(s) for s in rec.get("merged_from_segments", []))
+    for rec in read_manifest(index_dir):
+        used.update(int(s) for s in (rec.get("segments") or {}))
+        for k in keys:
+            if rec.get(k) is not None:
+                used.add(int(rec[k]))
+        used.update(int(s) for s in rec.get("merged_from_segments", []))
     return used
 
 
@@ -246,7 +242,7 @@ def merge_segments(
     t0 = time.time()
     new_id = new_segment_id if new_segment_id is not None else _allocate_segment_id(index_dir, segment_ids)
     out_chunk = out_chunk or f"merge-{new_id}-{len(segment_ids)}"
-    post = spark.read.option("mergeSchema", "true").parquet(os.path.join(index_dir, "postings")).filter(
+    post = read_table(spark, os.path.join(index_dir, "postings")).filter(
         F.col("segment_id").isin(segment_ids)
     )
     has_kind = "kind" in post.columns
@@ -277,7 +273,7 @@ def merge_segments(
         os.path.join(index_dir, "postings", f"chunk={out_chunk}")
     )
 
-    td = spark.read.option("mergeSchema", "true").parquet(os.path.join(index_dir, "term_dict")).filter(
+    td = read_table(spark, os.path.join(index_dir, "term_dict")).filter(
         F.col("segment_id").isin(segment_ids)
     )
     has_spread = "bmf_min" in td.columns
@@ -306,7 +302,7 @@ def merge_segments(
         os.path.join(index_dir, "term_dict", f"chunk={out_chunk}")
     )
 
-    ds = spark.read.parquet(os.path.join(index_dir, "doc_stats")).filter(
+    ds = read_table(spark, os.path.join(index_dir, "doc_stats")).filter(
         F.col("segment_id").isin(segment_ids)
     ).withColumn("segment_id", F.lit(new_id).cast("int"))
     _strip_chunk(ds).write.mode("overwrite").parquet(
@@ -352,7 +348,7 @@ def _merge_expunge(spark, index_dir, segment_ids, new_segment_id, out_chunk,
         f"merge-{new_id}-{len(segment_ids)}" if scoped_only
         else f"expunge-{new_id}-{len(segment_ids)}"
     )
-    post = spark.read.option("mergeSchema", "true").parquet(os.path.join(index_dir, "postings")).filter(
+    post = read_table(spark, os.path.join(index_dir, "postings")).filter(
         F.col("segment_id").isin(segment_ids)
     )
     zcols = ["doc_ids", "freqs", "dlqs", "norm_bytes"]
@@ -407,25 +403,12 @@ def _merge_expunge(spark, index_dir, segment_ids, new_segment_id, out_chunk,
         recursive=True,
     )
     written = (
-        spark.read.parquet(os.path.join(index_dir, "postings", f"chunk={out_chunk}"))
+        read_table(spark, os.path.join(index_dir, "postings", f"chunk={out_chunk}"))
         if _files else merged
     )
-    td = (
-        written.filter(F.col("kind") == "post")
-        .groupBy("segment_id", "field", "term")
-        .agg(
-            F.max("df_seg").alias("df"),
-            F.max("ttf_seg").alias("ttf"),
-            F.when(F.max("df_seg") == 1, F.min(F.element_at("doc_ids", 1))).alias("pulsed_doc"),
-            F.when(F.max("df_seg") == 1, F.min(F.element_at("freqs", 1))).alias("pulsed_freq"),
-            F.min("block_max_freq").alias("bmf_min"),
-            F.max("block_max_freq").alias("bmf_max"),
-            F.min("block_min_dlq").alias("bdlq_min"),
-            F.max("block_min_dlq").alias("bdlq_max"),
-        )
-    )
+    td = term_dict_frame(written)
     _strip_chunk(td).write.mode("overwrite").parquet(os.path.join(index_dir, "term_dict", f"chunk={out_chunk}"))
-    ds = spark.read.parquet(os.path.join(index_dir, "doc_stats")).filter(
+    ds = read_table(spark, os.path.join(index_dir, "doc_stats")).filter(
         F.col("segment_id").isin(segment_ids)
     )
     if tomb is not None:
@@ -462,8 +445,8 @@ def refresh_field_stats(spark: SparkSession, index_dir: str) -> None:
     set (post-merge/expunge), with the manifest's omitNorms fields."""
     from .builder import dead_segments, field_stats_rows, omit_norms_fields, write_field_stats
 
-    ds = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
-    td = spark.read.parquet(os.path.join(index_dir, "term_dict"))
+    ds = read_table(spark, os.path.join(index_dir, "doc_stats"))
+    td = read_table(spark, os.path.join(index_dir, "term_dict"))
     dead = dead_segments(index_dir)
     if dead:
         alive = lambda df: df.filter(~F.col("segment_id").isin([int(x) for x in dead]))
@@ -553,17 +536,7 @@ def verify_index(spark: SparkSession, index_dir: str, source_df: DataFrame | Non
     #    an updated doc's old ds row must pair with the OLD version's
     #    meta row, so the sha-equality test runs per (segment, doc) and a
     #    separate coverage assert guarantees the join cannot go vacuous.
-    mdir = os.path.join(index_dir, "manifest")
-    children4: dict[int, list[int]] = {}
-    if os.path.isdir(mdir):
-        for fn in os.listdir(mdir):
-            if fn.endswith(".json"):
-                with open(os.path.join(mdir, fn)) as f:
-                    rec4 = json.load(f)
-                if rec4.get("kind") == "merge" and rec4.get("new_segment_id") is not None:
-                    children4[int(rec4["new_segment_id"])] = [
-                        int(s) for s in rec4.get("merged_from_segments", [])
-                    ]
+    children4 = _merge_children(read_manifest(index_dir))
     final4: dict[int, int] = {}
     for out4, ins4 in children4.items():
         for s4 in ins4:

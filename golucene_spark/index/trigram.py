@@ -40,19 +40,11 @@ TRIGRAM_CHUNK = "trigram"
 def _data_chunk_count(index_dir: str) -> int:
     """Number of committed segment-data manifest records (build chunks,
     stream/update flushes, merges) — the trigram table's freshness key."""
-    mdir = os.path.join(index_dir, "manifest")
-    n = 0
-    if os.path.isdir(mdir):
-        for fn in os.listdir(mdir):
-            if not fn.endswith(".json"):
-                continue
-            with open(os.path.join(mdir, fn)) as f:
-                rec = json.load(f)
-            if rec.get("kind") not in ("delete", "trigram") and (
-                rec.get("status") == "committed"
-            ):
-                n += 1
-    return n
+    from .builder import read_manifest
+
+    return sum(1 for rec in read_manifest(index_dir)
+               if rec.get("kind") not in ("delete", "trigram")
+               and rec.get("status") == "committed")
 
 
 def trigrams_col(term_col="term"):
@@ -100,13 +92,14 @@ def build_trigram_index(spark: SparkSession, index_dir: str) -> dict:
 
 
 def refresh_trigram_index(spark: SparkSession, index_dir: str,
-                          new_terms: DataFrame | None = None) -> dict | None:
+                          new_terms: "pa.Table | None" = None) -> dict | None:
     """Keep an EXISTING trigram table fresh across commit paths (NRT /
     update flushes, merges) so infix seeks survive a living index
     without a manual rebuild.  No-op when the index never built one.
 
-    ``new_terms``: the just-committed chunk's (field, term) frame — its
-    trigrams are APPENDED as a delta (duplicates are harmless:
+    ``new_terms``: the just-committed chunk's (field, term) rows, an
+    Arrow table read on the driver — their trigrams are APPENDED as a
+    delta file written with pyarrow (duplicates are harmless:
     trigram_candidates counts DISTINCT grams per term).  None = the
     commit introduced no new terms (a merge: its output terms are a
     subset of the union of its inputs'), so only the freshness key
@@ -130,20 +123,37 @@ def refresh_trigram_index(spark: SparkSession, index_dir: str,
         return build_trigram_index(spark, index_dir)
     t0 = time.time()
     if new_terms is not None:
-        (
-            new_terms.select("field", "term").distinct()
-            .select("field", "term", F.explode(trigrams_col()).alias("gram"))
-            .distinct()
-            .repartitionByRange(1, "field", "gram")
-            .sortWithinPartitions("field", "gram", "term")
-            .write.mode("append").parquet(ddir)
-        )
+        _append_trigrams(ddir, new_terms)
     rec["built_over_chunks"] = cur
     rec["wall_sec"] = round(time.time() - t0, 3)
     rec["kind"] = "trigram"
     with open(mpath, "w") as f:
         json.dump(rec, f)
     return rec
+
+
+def _append_trigrams(ddir: str, terms) -> None:
+    """One (field, term, gram) delta file of ``terms``' trigrams, sorted
+    by (field, gram, term), with ``trigrams_col``'s grams: every
+    3-char substring, or the whole term when it is shorter."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pairs = {(f, t) for f, t in zip(terms["field"].to_pylist(), terms["term"].to_pylist())
+             if t is not None}
+    rows = sorted({(f, g, t) for f, t in pairs
+                   for g in (t[i:i + 3] for i in range(max(len(t) - 2, 1)))})
+    table = pa.table({
+        "field": pa.array([r[0] for r in rows], pa.string()),
+        "term": pa.array([r[2] for r in rows], pa.string()),
+        "gram": pa.array([r[1] for r in rows], pa.string()),
+    })
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(ddir, f".{name}.tmp")
+    pq.write_table(table, tmp, store_schema=False)
+    os.replace(tmp, os.path.join(ddir, name))
 
 
 def load_trigram_index(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -158,7 +168,9 @@ def load_trigram_index(spark: SparkSession, index_dir: str) -> DataFrame | None:
         rec = json.load(f)
     if rec.get("built_over_chunks") != _data_chunk_count(index_dir):
         return None  # stale: chunks were added/merged since the build
-    return spark.read.parquet(ddir)
+    from .builder import read_table
+
+    return read_table(spark, ddir)
 
 
 def trigram_candidates(trigram: DataFrame, field: str, runs: list[str],

@@ -70,3 +70,28 @@ def placement():
             topk.DRIVER_MAX_DF = old
 
     return each
+
+
+@pytest.fixture
+def flush_placement(monkeypatch):
+    """``for where in flush_placement():`` runs the loop body once per NRT
+    flush placement: ``"driver"`` flushes every pandas-backed batch in
+    process (streaming/nrt.py), ``"spark"`` sends every flush to Spark.
+    The switch is ``nrt.DRIVER_FLUSH_ROWS``, as in production; it is
+    restored when the loop ends.  ``flush_placement.use(where)`` sets a
+    placement for the rest of the test instead."""
+    from golucene_spark.streaming import nrt
+
+    limits = {"driver": 1 << 62, "spark": -1}
+
+    def each():
+        old = nrt.DRIVER_FLUSH_ROWS
+        try:
+            for where, limit in limits.items():
+                nrt.DRIVER_FLUSH_ROWS = limit
+                yield where
+        finally:
+            nrt.DRIVER_FLUSH_ROWS = old
+
+    each.use = lambda where: monkeypatch.setattr(nrt, "DRIVER_FLUSH_ROWS", limits[where])
+    return each

@@ -14,6 +14,7 @@ which no single-op test composes."""
 
 import random
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -53,7 +54,7 @@ def _segments(spark, ixdir) -> list[int]:
     return sorted(segs - dead_segments(ixdir))
 
 
-def test_lifecycle_fuzz(spark, tmp_path_factory, placement):
+def test_lifecycle_fuzz(spark, tmp_path_factory, placement, flush_placement):
     import os as _os
     rng = random.Random(int(_os.environ.get("FUZZ_SEED", "7")))
     ixdir = str(tmp_path_factory.mktemp("lifecycle") / "ix")
@@ -66,8 +67,16 @@ def test_lifecycle_fuzz(spark, tmp_path_factory, placement):
     # live state the engine must agree with at every step
     live: dict[int, dict] = {}
 
+    # pandas-backed frames, so a flush may take either placement
     def frame(ids):
-        return spark.createDataFrame([rows[i] for i in ids])
+        return spark.createDataFrame(pd.DataFrame([rows[i] for i in ids]))
+
+    # the NRT and update steps alternate the flush placement
+    flushes: list[str] = []
+
+    def next_flush():
+        flushes.append(("driver", "spark")[len(flushes) % 2])
+        flush_placement.use(flushes[-1])
 
     # base build: first 120 docs
     base_ids = list(range(120))
@@ -100,10 +109,12 @@ def test_lifecycle_fuzz(spark, tmp_path_factory, placement):
             batch = [i for _, i in zip(range(rng.randint(5, 20)), next_ids)]
             if not batch:
                 continue
-            incremental_index_batch(
+            next_flush()
+            rec = incremental_index_batch(
                 frame(batch), stream_epoch, ixdir, spec,
                 analyzer="simple", quantize_norms=False,
             )
+            assert rec["flush"] == flushes[-1], rec
             stream_epoch += 1
             live.update({i: rows[i] for i in batch})
         elif op == "update":
@@ -118,8 +129,10 @@ def test_lifecycle_fuzz(spark, tmp_path_factory, placement):
                 r["content"] = f"{marker} fresh {r['content']}"
                 upd.append(r)
                 live[i] = r
-            update_documents(spark, ixdir, spark.createDataFrame(upd), spec,
-                             analyzer="simple", quantize_norms=False)
+            next_flush()
+            rec = update_documents(spark, ixdir, spark.createDataFrame(pd.DataFrame(upd)),
+                                   spec, analyzer="simple", quantize_norms=False)
+            assert rec["flush"] == flushes[-1], rec
             # the marker token matches EXACTLY the updated docs' newest
             # versions — stale versions must be invisible
             s = Searcher(MaterializedIndex(spark, ixdir), "bm25")
@@ -158,6 +171,7 @@ def test_lifecycle_fuzz(spark, tmp_path_factory, placement):
     # the seed must actually exercise the interactions this test is for
     assert {"nrt", "update", "merge"} <= set(executed), executed
     assert {"delete_ids", "delete_query"} & set(executed), executed
+    assert set(flushes) == {"driver", "spark"}, flushes
 
     # final: expunge-merge everything (single-segment expunge is
     # Lucene's forceMergeDeletes) -> only now are collection/term stats
