@@ -1118,6 +1118,8 @@ class IndexBuilder:
                     "salt_range": self.salt_range,
                     "wand_layout": self.wand_layout,
                     "omit_norms_fields": sorted(_omit_norms(self.spec)),
+                    # the text field doc_meta's content_sha256 hashes
+                    "sha_field": self.spec.text_fields[0].name,
                     "num_segments": nseg,
                     "num_chunks": num_chunks,
                     "wall_sec": round(time.time() - t0, 3),
@@ -1560,13 +1562,15 @@ class MaterializedIndex:
 
         return live_rows(self, out).drop("segment_id")
 
-    def postings_arrays(self, field: str, terms: list[str]):
+    def postings_arrays(self, field: str, terms: list[str], with_positions: bool = False):
         """The Arrow twin of ``postings_for_terms``: a pyarrow Table
-        (term, doc_id, freq, dlq, norm_byte) of the live postings of
-        (field, terms), read on the driver from the posting files listed
-        at open.  Same file pruning (manifest term_ranges), dead
-        segments and tombstones (full deletes, update supersedes,
-        merged-origin exact segments) as the Spark frame."""
+        (term, doc_id, freq, dlq, norm_byte[, positions]) of the live
+        postings of (field, terms), read on the driver from the posting
+        files listed at open.  Same file pruning (manifest term_ranges),
+        dead segments and tombstones (full deletes, update supersedes,
+        merged-origin exact segments) as the Spark frame.  ``positions``
+        is the packed position blob per posting (null for a field
+        indexed without positions)."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
@@ -1578,22 +1582,23 @@ class MaterializedIndex:
                      and _ranges_may_contain(self._term_ranges[rel], field, terms)]
             self.last_prune_stats = (len(self._term_ranges), len(frags))
             src = ds.FileSystemDataset(frags, src.schema, src.format, src.filesystem)
+        schema = _POSTING_ROWS
+        lists = ["doc_ids", "freqs", "dlqs", "norm_bytes"]
+        if with_positions:
+            schema = schema.append(pa.field("positions", pa.binary()))
+            lists.append("positions")
         if src is None or not terms:
-            return _POSTING_ROWS.empty_table()
+            return schema.empty_table()
         flt = (pc.field("field") == field) & pc.field("term").isin(list(terms))
         if self._dead:
             flt &= ~pc.field("segment_id").isin(self._dead)
-        blocks = src.to_table(
-            columns=["segment_id", "term", "doc_ids", "freqs", "dlqs", "norm_bytes"],
-            filter=flt,
-        )
+        blocks = src.to_table(columns=["segment_id", "term", *lists], filter=flt)
         parent = pc.list_parent_indices(blocks.column("doc_ids"))
         rows = pa.table(
             [pc.take(blocks.column("term"), parent)]
-            + [pc.list_flatten(blocks.column(c))
-               for c in ("doc_ids", "freqs", "dlqs", "norm_bytes")],
-            names=_POSTING_ROWS.names,
-        ).cast(_POSTING_ROWS)
+            + [pc.list_flatten(blocks.column(c)) for c in lists],
+            names=schema.names,
+        ).cast(schema)
         if self._tomb_table is not None:
             from .deletes import live_mask
 

@@ -107,7 +107,7 @@ def tombstones(spark: SparkSession, index_dir: str,
     - before_segment = V kills only versions in segments < V
       (updateDocument supersede);
     - exact_segment = M kills the doc's versions in exactly segment M —
-      synthesized here for MERGED segments: merge relabels inputs to a
+      synthesized here for LIVE merged segments: merge relabels inputs to a
       MERGE_ID_BASE+ id that is not ordinally comparable with V, so a
       scoped tombstone is translated through the manifest's
       merged_from_segments: if every transitive original input of M is
@@ -128,9 +128,7 @@ def tombstones(spark: SparkSession, index_dir: str,
         t = t.withColumn("before_segment", F.lit(None).cast("long"))
     t = t.select("doc_id", "before_segment").distinct()
     t = t.withColumn("exact_segment", F.lit(None).cast("long"))
-    from .merge import merged_origin_ranges
-
-    origin = merged_origin_ranges(index_dir, records)
+    origin = _live_merged_origins(index_dir, records)
     if origin:
         # a literal inline table: a createDataFrame(<list>) here would put
         # a Python-worker RDD scan into every query plan on the index;
@@ -159,7 +157,6 @@ def tombstone_table(index_dir: str, records: list[dict] | None = None):
     import pyarrow.compute as pc
 
     from .builder import _arrow_dataset
-    from .merge import merged_origin_ranges
 
     d = _tombstone_dir(index_dir)
     t = _arrow_dataset(d) if os.path.isdir(d) else None
@@ -175,11 +172,25 @@ def tombstone_table(index_dir: str, records: list[dict] | None = None):
         "exact_segment": pa.nulls(n, pa.int64()),
     })
     parts = [base]
-    for m, (_, maxorig) in merged_origin_ranges(index_dir, records).items():
+    for m, (_, maxorig) in _live_merged_origins(index_dir, records).items():
         hit = base.filter(pc.field("before_segment") > maxorig)
         parts.append(hit.set_column(2, "exact_segment",
                                     pa.array([int(m)] * len(hit), pa.int64())))
     return pa.concat_tables(parts)
+
+
+def _live_merged_origins(index_dir: str, records: list[dict] | None):
+    """``merged_origin_ranges`` of the merge outputs still live: an
+    output a later merge consumed holds no row any reader sees, so an
+    exact_segment tombstone for it would only grow the table (and push
+    ``live_rows`` past LITERAL_TOMBSTONES) with every merge round."""
+    from .builder import dead_segments, read_manifest
+    from .merge import merged_origin_ranges
+
+    records = read_manifest(index_dir) if records is None else records
+    dead = dead_segments(index_dir, records)
+    return {m: r for m, r in merged_origin_ranges(index_dir, records).items()
+            if m not in dead}
 
 
 def _tomb_groups(table):

@@ -536,7 +536,8 @@ def verify_index(spark: SparkSession, index_dir: str, source_df: DataFrame | Non
     #    an updated doc's old ds row must pair with the OLD version's
     #    meta row, so the sha-equality test runs per (segment, doc) and a
     #    separate coverage assert guarantees the join cannot go vacuous.
-    children4 = _merge_children(read_manifest(index_dir))
+    records = read_manifest(index_dir)
+    children4 = _merge_children(records)
     final4: dict[int, int] = {}
     for out4, ins4 in children4.items():
         for s4 in ins4:
@@ -563,6 +564,13 @@ def verify_index(spark: SparkSession, index_dir: str, source_df: DataFrame | Non
             )
         if dead:
             dmt = dmt.filter(~F.col("segment_id").isin([int(x) for x in dead]))
+    # doc_meta hashes one text field (the spec's first; build and NRT
+    # records name it), doc_stats holds one row per text field: only
+    # the hashed field's rows pair with it
+    sha_field = next((r["sha_field"] for r in records if "sha_field" in r), None)
+    ds_all = ds
+    if sha_field is not None:
+        ds = ds.filter(F.col("field") == sha_field)
     ds_k = ds.select("segment_id", "doc_id", "content_sha256")
     dm_k = dmt.select("segment_id", "doc_id",
                       F.col("content_sha256").alias("jvm_sha"))
@@ -583,7 +591,12 @@ def verify_index(spark: SparkSession, index_dir: str, source_df: DataFrame | Non
         )
         .count()
     )
-    bad4 = ds_k.count() - matched
+    checked = ds_k.count()
+    report["sha256_rows_checked"] = checked
+    assert checked or not ds_all.limit(1).count(), (
+        f"no doc_stats rows of field {sha_field!r} (parity check would be vacuous)"
+    )
+    bad4 = checked - matched
     report["sha256_mismatches"] = bad4
     assert bad4 == 0
 

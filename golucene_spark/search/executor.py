@@ -20,11 +20,11 @@ Reference trace (SURVEY §3.2/3.3) -> Spark shape:
            TakeOrderedAndProject: per-partition top-k + driver merge,
            exactly the per-leaf-collect + docBase-merge of
            search.go:95-113
-         - driver: a selective term/boolean query on a
-           MaterializedIndex is scored and cut to k by one Arrow/NumPy
-           kernel (search/topk.py) with no Catalyst plan and no Spark
-           job; Searcher.search picks it by the summed df of the
-           query's terms
+         - driver: a selective term, boolean, fuzzy or phrase query
+           on a MaterializedIndex is scored and cut to k by one
+           Arrow/NumPy kernel (search/topk.py) with no Catalyst plan
+           and no Spark job; Searcher.search picks it by the summed df
+           of the query's terms
 """
 
 from __future__ import annotations
@@ -941,10 +941,12 @@ class Searcher:
         doc_id identically on both sides of the page boundary (ADVICE
         r4: raw-float page 1 vs e6 page 2 could skip/duplicate a hit).
 
-        Two placements, one order: a selective term or boolean query on
-        a MaterializedIndex is scored and collected on the driver
-        (search/topk.py, no Spark job, nothing put in the plan cache);
-        every other query runs ``collect_topk`` in Spark."""
+        Two placements, one order: a selective term, boolean, phrase
+        (exact or sloppy) or fuzzy query on a MaterializedIndex is
+        scored and collected on the driver (search/topk.py, no Spark
+        job, nothing put in the plan cache; a fuzzy query expands over
+        the snapshot's term_dict with Arrow); every other query runs
+        ``collect_topk`` in Spark."""
         if isinstance(query, str):
             from .parser import parse_query
 

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from .ast import MAX_CLAUSE_COUNT, BooleanClause, BooleanQuery, Occur, TermQuery
@@ -459,43 +461,82 @@ def expand_wildcard(index, field: str, pattern: str, boost: float = 1.0,
     ).rewrite()
 
 
+def levenshtein(cands: list[str], term: str) -> np.ndarray:
+    """Levenshtein distance of every candidate to ``term``, counted over
+    Unicode code points as Spark's ``levenshtein`` counts it.  The
+    classic DP keeps one row per query character, vectorized over all
+    candidates; the insertion step's left-to-right dependency is the
+    running minimum min_k<=j (row[k] + j - k) = j + cummin(row - k)."""
+    n = len(cands)
+    lens = np.fromiter(map(len, cands), np.int64, n)
+    width = max(int(lens.max()) if n else 0, 1)
+    # UCS-4: one uint32 code point per column, NUL-padded past each
+    # candidate's length (columns past it never feed its distance)
+    chars = np.array(cands, dtype=f"<U{width}").view(np.uint32).reshape(n, width)
+    ar = np.arange(width + 1, dtype=np.int64)
+    row = np.broadcast_to(ar, (n, width + 1)).copy()
+    for i, ch in enumerate(term, 1):
+        step = np.empty_like(row)
+        step[:, 0] = i
+        step[:, 1:] = np.minimum(row[:, :-1] + (chars != ord(ch)), row[:, 1:] + 1)
+        row = np.minimum.accumulate(step - ar, axis=1) + ar
+    return row[np.arange(n), lens]
+
+
+def _field_terms(index, field: str, prefix: str, lo: int, hi: int) -> list[str]:
+    """The field's distinct dictionary terms starting with ``prefix``
+    whose length in code points is within [lo, hi], sorted as Spark's
+    orderBy("term") sorts them.  On a MaterializedIndex an Arrow read
+    of the term_dict files listed at open (live segments only), no
+    Spark job; on a LogicalIndex one collect of its TF frame."""
+    if hasattr(index, "_term_dict_ds"):
+        if index._term_dict_ds is None:
+            return []
+        flt = pc.field("field") == field
+        if index._dead:
+            flt &= ~pc.field("segment_id").isin(index._dead)
+        if prefix:
+            flt &= pc.starts_with(pc.field("term"), pattern=prefix)
+        terms = pc.unique(index._term_dict_ds.to_table(columns=["term"], filter=flt)
+                          .column("term").combine_chunks())
+        n = pc.utf8_length(terms)
+        terms = terms.filter(pc.and_(pc.greater_equal(n, lo), pc.less_equal(n, hi)))
+        return sorted(terms.to_pylist())
+    src = index.tf.filter(F.col("field") == field)
+    if prefix:
+        src = src.filter(F.col("term").startswith(prefix))
+    src = src.filter(F.length("term").between(lo, hi)).select("term").distinct()
+    return sorted(r["term"] for r in src.collect())
+
+
 def expand_fuzzy(index, field: str, term: str, max_edits: int = 2,
                  boost: float = 1.0, max_terms: int = MAX_CLAUSE_COUNT,
                  prefix_length: int = 0):
     """FuzzyQuery -> BooleanQuery(SHOULD of TermQuery) over dictionary
     terms within ``max_edits`` Levenshtein distance.
 
-    Candidate generation is JVM-side: a pushed-down length-window
-    prefilter (|len(t) - len(q)| <= e) then F.levenshtein — no automaton
-    port needed (the reference's automaton lib at core/util/automaton/
-    is never reached: queryParser.go:178-190 panics).  Each expanded
-    term is down-weighted by Lucene's FuzzyTermsEnum boost
+    Candidate generation runs on the driver: the field's dictionary
+    terms within the length window |len(t) - len(q)| <= e (an Arrow
+    read of term_dict on a MaterializedIndex, no Spark job), then one
+    vectorized Levenshtein over all of them (``levenshtein``, Spark's
+    code-point distance) — no automaton port needed (the reference's
+    automaton lib at core/util/automaton/ is never reached:
+    queryParser.go:178-190 panics).  Each expanded term is
+    down-weighted by Lucene's FuzzyTermsEnum boost
     (1 - distance / min(len(term), len(query))).
 
     ``prefix_length`` (FuzzyQuery.prefixLength): candidates must share
-    the query's first N chars exactly — a StartsWith predicate the
-    sorted term dictionary's row-group stats turn into a range seek, so
-    the levenshtein scan covers only the prefix slice of the dict."""
-    if hasattr(index, "term_dict"):
-        src = index.term_dict.filter(F.col("field") == field).select("term").distinct()
-    else:
-        src = index.tf.filter(F.col("field") == field).select("term").distinct()
+    the query's first N chars exactly, a StartsWith predicate applied
+    with the read."""
     n = len(term)
-    if prefix_length > 0:
-        src = src.filter(F.col("term").startswith(term[:prefix_length]))
-    cand = (
-        src.filter(F.length("term").between(n - max_edits, n + max_edits))
-        .withColumn("dist", F.levenshtein(F.col("term"), F.lit(term)))
-        .filter(F.col("dist") <= max_edits)
-        .orderBy("term")
-        .limit(max_terms + 1)
-        .collect()
-    )
-    if len(cand) > max_terms:
+    cands = _field_terms(index, field, term[:prefix_length] if prefix_length > 0 else "",
+                         n - max_edits, n + max_edits)
+    dist = levenshtein(cands, term)
+    hits = [(t, int(d)) for t, d in zip(cands, dist) if d <= max_edits]
+    if len(hits) > max_terms:
         raise ValueError(f"maxClauseCount is set to {max_terms}")
     clauses = []
-    for r in cand:
-        t, d = r["term"], int(r["dist"])
+    for t, d in hits:
         tb = boost * (1.0 - d / min(len(t), n)) if d > 0 else boost
         if tb > 0:
             clauses.append(BooleanClause(TermQuery(field, t, tb), Occur.SHOULD))
@@ -578,8 +619,8 @@ def suggest_terms(index, field: str, term: str, k: int = 5, max_edits: int = 2):
     df desc, term asc) — closer corrections first, popular terms
     breaking ties.  Returns a DataFrame (term, dist, df).
 
-    Scale shape: same JVM-side candidate scan as expand_fuzzy — the
-    length-window prefilter is pushed to the sorted term_dict parquet,
+    Scale shape: a JVM-side candidate scan (the result is a frame) —
+    the length-window prefilter is pushed to the sorted term_dict parquet,
     levenshtein runs in whole-stage codegen, top-k is
     TakeOrderedAndProject."""
     if hasattr(index, "term_dict"):

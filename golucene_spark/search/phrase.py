@@ -7,18 +7,23 @@ term_i occurs at p+i for all i; the doc is scored by the query's
 similarity with freq=phraseFreq and idf = sum of the terms' idfs
 (Lucene's PhraseWeight sums idfs via Similarity.idfExplain(terms)).
 
-Execution shape: conjunction (inner joins on doc_id — only docs
-containing ALL terms survive) -> one vectorized pandas stage that
-intersects offset-shifted position sets for the WHOLE Arrow batch at
-once: per-doc position arrays are flattened into a single int64 array
-keyed by (row_index << 32) + (position - term_offset), so one
-np.intersect1d per query term replaces any per-doc Python loop.
+Execution shape: conjunction (only docs containing ALL terms survive)
+-> one matcher over the whole batch at once (``slot_freqs``): each
+slot's position blobs are decoded from the Arrow buffers into a single
+int64 array keyed by (row_index << 32) + (position - term_offset), so
+one intersection (exact) or one window count (sloppy) per query term
+replaces any per-doc Python loop.  Two placements share that matcher:
+a selective phrase is answered on the driver by the top-k kernel
+(search/topk.py) over ``MaterializedIndex.postings_arrays``; otherwise
+Spark runs the conjunction, the exact match as array_intersect in
+whole-stage codegen and the sloppy match in a mapInArrow stage.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -26,15 +31,50 @@ from .ast import PhraseQuery
 from .executor import norm_bytes
 
 
-def _flat_rows_adj(col, term_offset: int, n_rows: int):
-    """Column of packed little-endian int32 position blobs ->
-    (rows, adjusted positions) int64 arrays, one frombuffer over the
-    concatenated blobs — no per-position Python work."""
-    bufs = [bytes(b) if b is not None else b"" for b in col]
-    lens = np.fromiter((len(b) >> 2 for b in bufs), dtype=np.int64, count=n_rows)
-    flat = np.frombuffer(b"".join(bufs), dtype="<i4").astype(np.int64)
-    rows = np.repeat(np.arange(n_rows, dtype=np.int64), lens)
+def _flat_rows_adj(blobs, term_offset: int):
+    """Arrow binary array of packed little-endian int32 position blobs
+    (row i's blob at index i; null = no positions) -> (rows, adjusted
+    positions) int64 arrays.  One np.frombuffer over the array's data
+    buffer, cut by its offsets: no per-row Python work and no copy of
+    the blobs."""
+    if blobs.null_count:
+        blobs = pc.fill_null(blobs, b"")
+    n = len(blobs)
+    _, off_buf, data = blobs.buffers()
+    wide = pa.types.is_large_binary(blobs.type)
+    offs = np.frombuffer(off_buf, np.int64 if wide else np.int32, n + 1,
+                         offset=blobs.offset * (8 if wide else 4)).astype(np.int64)
+    nbytes = int(offs[-1] - offs[0])
+    flat = (np.frombuffer(data, "<i4", nbytes >> 2, offset=int(offs[0]))
+            if nbytes else np.empty(0, "<i4")).astype(np.int64)
+    rows = np.repeat(np.arange(n, dtype=np.int64), np.diff(offs) >> 2)
     return rows, flat - term_offset
+
+
+def slot_freqs(slots, slop: int = 0, in_order: bool = False) -> np.ndarray:
+    """Phrase frequency per row of ``slots`` (one Arrow binary array of
+    position blobs per query slot, row-aligned: row r of every slot is
+    the same doc).  The one matcher of both placements: the Spark
+    sloppy stage runs it per Arrow batch, the driver top-k kernel over
+    the query's conjunction."""
+    m = len(slots[0])
+    flats = [_flat_rows_adj(b, i) for i, b in enumerate(slots)]
+    if slop or in_order:
+        return _batch_sloppy_freqs(flats, m, slop, in_order)
+    return _batch_exact_freqs(flats, m)
+
+
+def _batch_exact_freqs(flats, m: int) -> np.ndarray:
+    """Exact phrase frequency per row: the number of DISTINCT start
+    positions p with a slot-i occurrence at p + i for every i (the
+    array_intersect semantics of the Spark placement), as one
+    intersection of (row << 32) + (pos - i) keys per slot."""
+    shift = np.int64(len(flats))  # adjusted positions are >= -(n - 1)
+    keys = None
+    for rows, adj in flats:
+        k = np.unique((rows << 32) + (adj + shift))
+        keys = k if keys is None else np.intersect1d(keys, k, assume_unique=True)
+    return np.bincount(keys >> 32, minlength=m).astype(np.float64)
 
 
 def _batch_sloppy_freqs(flats, m: int, slop: int, in_order: bool) -> np.ndarray:
@@ -253,23 +293,18 @@ def _sloppy_from_base(base, n: int, slop: int,
     )
 
     def compute(batches):
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            flats = [_flat_rows_adj(pdf[f"pos{i}"], i, m) for i in range(n)]
-            freqs = _batch_sloppy_freqs(flats, m, slop, in_order)
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "freq": freqs,
-                    "dlq": pdf["dlq"],
-                    "norm_byte": pdf["norm_byte"],
-                }
-            )
-            yield out[out["freq"] > 0]
+            freqs = slot_freqs([rb.column(f"pos{i}") for i in range(n)], slop, in_order)
+            keep = pa.array(freqs > 0)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("doc_id"), pa.array(freqs), rb.column("dlq"),
+                 rb.column("norm_byte")],
+                names=["doc_id", "freq", "dlq", "norm_byte"],
+            ).filter(keep)
 
-    return base.mapInPandas(compute, schema)
+    return base.mapInArrow(compute, schema)
 
 
 def _exact_freq_frame(index, field: str, terms: list[str]) -> DataFrame:

@@ -10,20 +10,29 @@ of ``Searcher._boolean_frame``, and cut to the top k in the collector's
 order.  No Catalyst plan is built and no Spark job starts; the hits come
 back as a small local DataFrame.
 
-The kernel's class is what ``_boolean_frame`` folds into one scan:
+Multi-term nodes (fuzzy, wildcard, regexp, range) are first expanded
+through ``Searcher._resolve``, the snapshot-cache entry the Spark
+placement reads too; a fuzzy expansion is itself an Arrow read of the
+snapshot's term_dict (``multiterm.expand_fuzzy``).  The kernel's class
+is then what ``_boolean_frame`` folds into one scan, plus phrases:
 
 - a TermQuery on a text or keyword field;
 - a BooleanQuery of TermQuery clauses (MUST / SHOULD / MUST_NOT) and
   pure same-field OR groups as ``Searcher._flatten_or_group`` accepts
-  them, keyword-field MUST clauses scoring the constant
-  ``_keyword_const_score``;
-- boosts at both levels, ``minimum_should_match`` and classic coord.
+  them (an expanded fuzzy query is one), keyword-field MUST clauses
+  scoring the constant ``_keyword_const_score``;
+- boosts at both levels, ``minimum_should_match`` and classic coord;
+- a PhraseQuery, exact or sloppy (``in_order`` included): the postings
+  carry their position blobs, the conjunction is the docs holding every
+  term, and ``phrase.slot_freqs`` (the Spark sloppy stage's matcher)
+  gives the phrase frequency ``_phrase_frame`` scores.
 
 Every score comes from ``score_np`` with the Searcher's ``_term_scalar``,
 ``_collection_stats`` and ``norm_bytes``, the arithmetic explain already
-shares with the Spark placement's ``score_col``.  Everything else (and
-any query whose summed df exceeds DRIVER_MAX_DF) keeps the Spark
-placement, ``collect_topk`` over ``score_frame``.
+shares with the Spark placement's ``score_col``.  Everything else
+(MultiPhraseQuery, spans, dismax, phrases inside booleans) and any query
+whose summed df exceeds DRIVER_MAX_DF keeps the Spark placement,
+``collect_topk`` over ``score_frame``.
 """
 
 from __future__ import annotations
@@ -33,7 +42,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .ast import BooleanQuery, TermQuery
+from .ast import BooleanQuery, PhraseQuery, TermQuery
 
 # largest summed document frequency of a query's terms that the driver
 # answers.  df counts tombstoned docs, so it bounds the posting rows the
@@ -41,21 +50,27 @@ from .ast import BooleanQuery, TermQuery
 # (BENCH/driver_topk_crossover.json): the driver wins at every df on
 # 1k- and 50k-doc indexes; on a 200k-doc index its full read of the
 # posting files costs ~0.8 s whatever the df and Spark is ahead from
-# about 3,000 upward, so the cap bounds that loss
+# about 3,000 upward, so the cap bounds that loss.  Phrases share it:
+# with their position blobs read too, the driver still wins at every
+# summed df up to 200,000 on all three index sizes
+# (BENCH/driver_expand_crossover.json); fuzzy expansion wins at every
+# term_dict size there, so it has no cap of its own
 DRIVER_MAX_DF = 50_000
 
 
 def driver_search(searcher, query, k: int):
     """The top-k DataFrame of ``query`` computed on the driver, or None
     when the query belongs to the Spark placement (not a
-    MaterializedIndex, outside the kernel's class, or summed df above
-    DRIVER_MAX_DF)."""
+    MaterializedIndex, outside the kernel's class once expanded, or
+    summed df above DRIVER_MAX_DF)."""
     from ..index.builder import MaterializedIndex
     from .executor import RESULT_SCHEMA, empty_results
 
     if not isinstance(searcher.index, MaterializedIndex):
         return None
-    q = query.rewrite()
+    # fuzzy and the other multi-term nodes expand through the snapshot
+    # cache entry the Spark placement reads too
+    q = searcher._resolve(query.rewrite()).rewrite()
     if not _in_class(searcher, q):
         return None
     stats = searcher._term_stats(q)
@@ -72,6 +87,8 @@ def driver_search(searcher, query, k: int):
 def _in_class(searcher, q) -> bool:
     if isinstance(q, TermQuery):
         return True
+    if isinstance(q, PhraseQuery):
+        return len(q.terms) > 1
     return isinstance(q, BooleanQuery) and all(
         isinstance(c.query, TermQuery) or searcher._flatten_or_group(c.query)
         for c in q.clauses
@@ -118,17 +135,23 @@ class _Kernel:
         for (f, t), st in stats.items():
             if st.df:
                 by_field.setdefault(f, set()).add(t)
-        self.post = {}  # (field, term) -> [doc_id, freq, dlq, norm_byte]
+        with_positions = isinstance(q, PhraseQuery)
+        # (field, term) -> [doc_id, freq, dlq, norm_byte(, positions)]
+        self.post = {}
         for f, terms in by_field.items():
             terms = sorted(terms)
-            rows = searcher.index.postings_arrays(f, terms)
+            rows = searcher.index.postings_arrays(f, terms, with_positions)
             code = pc.index_in(rows.column("term"), value_set=pa.array(terms)).to_numpy()
             order = np.argsort(code, kind="stable")
             cuts = np.searchsorted(code[order], np.arange(len(terms) + 1))
             cols = [rows.column(c).to_numpy()[order]
                     for c in ("doc_id", "freq", "dlq", "norm_byte")]
+            if with_positions:
+                pos = rows.column("positions").take(pa.array(order)).combine_chunks()
             for i, t in enumerate(terms):
                 self.post[(f, t)] = [c[cuts[i]:cuts[i + 1]] for c in cols]
+                if with_positions:
+                    self.post[(f, t)].append(pos.slice(cuts[i], cuts[i + 1] - cuts[i]))
 
     def _empty(self):
         return np.empty(0, np.int64), np.empty(0, np.float64)
@@ -168,8 +191,45 @@ class _Kernel:
         return (np.concatenate([d for d, _ in parts]),
                 np.concatenate([s for _, s in parts]))
 
+    def phrase(self, q):
+        """(doc_ids, scores) of a PhraseQuery: ``Searcher._phrase_frame``
+        over arrays.  The conjunction is the docs that hold every term
+        with positions; ``phrase.slot_freqs``, the Spark placement's
+        matcher, counts the phrase per doc, and the doc is scored with
+        freq = phraseFreq and idf = the sum of the terms' idfs."""
+        from .executor import norm_bytes
+        from .phrase import slot_freqs
+
+        posts = [self.post.get((q.field, t)) for t in q.terms]
+        if any(p is None for p in posts):
+            return self._empty()
+        docs = None
+        for d, *_, pos in posts:
+            d = d[pos.is_valid().to_numpy(zero_copy_only=False)]
+            docs = d if docs is None else np.intersect1d(docs, d)
+        if not len(docs):
+            return self._empty()
+        rows = []  # each term's row of docs[r], so slot rows align
+        for d, *_ in posts:
+            order = np.argsort(d, kind="stable")
+            rows.append(order[np.searchsorted(d, docs, sorter=order)])
+        freq = slot_freqs([p[4].take(pa.array(r)) for p, r in zip(posts, rows)],
+                          q.slop, q.in_order)
+        hit = freq > 0
+        at = rows[0][hit]
+        _, _, dlq, nb, _ = posts[0]
+        cs = self.s._collection_stats(q.field)
+        idf = sum(self.sim.idf(self.stats[(q.field, t)].df, cs["max_doc"]) for t in q.terms)
+        kw = {"query_norm": self.qn} if self.sim.uses_coord else {}
+        return docs[hit], self.sim.score_np(
+            freq[hit], dlq[at], norm_bytes(self.s.index, nb[at]), idf,
+            self.sim.avgdl(cs["sum_ttf"], cs["max_doc"]), q.boost, **kw,
+        )
+
     def scores(self, q):
-        return self.term(q) if isinstance(q, TermQuery) else self.boolean(q)
+        if isinstance(q, TermQuery):
+            return self.term(q)
+        return self.phrase(q) if isinstance(q, PhraseQuery) else self.boolean(q)
 
     def boolean(self, q):
         """``Searcher._boolean_frame`` over arrays."""

@@ -184,6 +184,8 @@ def _flush_batch(batch_df, epoch_id, index_dir, spec, analyzer="standard",
         "flush": placement,
         "quantize_norms": quantize_norms,
         "omit_norms_fields": sorted(omit_norms),
+        # the text field doc_meta's content_sha256 hashes (verify_index)
+        "sha_field": spec.text_fields[0].name,
         "field_stats": batch_fs,
         "stats_mode": "incremental" if incremental else "recompute",
         "wall_sec": round(time.time() - t0, 3),

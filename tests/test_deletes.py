@@ -103,15 +103,22 @@ def lifecycle_ix(spark, tmp_path):
 
 
 def test_literal_live_predicate_keeps_what_the_anti_join_keeps(spark, lifecycle_ix):
-    from pyspark.sql import functions as F
-
-    from golucene_spark.index.deletes import filter_live, live_mask, live_predicate
-
     ix = lifecycle_ix
     t = ix._tomb_table
     assert t.column("before_segment").null_count < t.num_rows        # supersedes
     assert t.column("exact_segment").null_count < t.num_rows         # merged origin
     assert any(b is None for b in t.column("before_segment").to_pylist())  # full deletes
+    _assert_liveness_agrees(ix)
+
+
+def _assert_liveness_agrees(ix):
+    """live_predicate, the filter_live anti-join and live_mask keep the
+    same posting rows of ``ix``."""
+    from pyspark.sql import functions as F
+
+    from golucene_spark.index.deletes import filter_live, live_mask, live_predicate
+
+    t = ix._tomb_table
     rows = ix.postings.select("segment_id", F.explode("doc_ids").alias("doc_id"))
     key = lambda f: sorted((r["segment_id"], r["doc_id"]) for r in f.collect())
     want = key(filter_live(rows, ix._tombstones))
@@ -124,6 +131,44 @@ def test_literal_live_predicate_keeps_what_the_anti_join_keeps(spark, lifecycle_
     ids = rows.select("doc_id")
     assert (sorted(r[0] for r in filter_live(ids, ix._tombstones).collect())
             == sorted(r[0] for r in ids.filter(live_predicate(t, None)).collect()))
+
+
+def test_tombstones_skip_dead_merge_outputs(spark, tmp_path):
+    """Each round updates docs, merges every live segment and updates
+    again.  Only the one live merged segment gets exact_segment rows
+    (one per id of the update after it); the outputs of earlier rounds
+    are dead, so the table does not grow with the merge history, and
+    all three liveness filters agree after every round."""
+    from golucene_spark.index import merge_segments
+    from golucene_spark.index.deletes import tombstone_table, tombstones, update_documents
+
+    spec = CorpusSpec.documents()
+    schema = "doc_id long, text string, lang string, source string"
+    ixdir = str(tmp_path / "ix")
+    IndexBuilder(spark, spec, analyzer="simple", num_segments=3).build(
+        spark.createDataFrame([(i, f"alpha w{i % 5}", "en", "web") for i in range(40)],
+                              schema), ixdir)
+    upd = lambda ids, word: update_documents(spark, ixdir, spark.createDataFrame(
+        [(i, f"alpha {word}", "en", "web") for i in ids], schema), spec, analyzer="simple")
+    raw = 0
+    for r in range(4):
+        upd([r, r + 10, r + 20], f"first{r}")
+        ix = MaterializedIndex(spark, ixdir)
+        merge_segments(spark, ixdir, sorted(
+            int(x["segment_id"]) for x in ix.term_dict.select("segment_id").distinct().collect()))
+        late = [r + 1, r + 11]
+        upd(late, f"second{r}")
+        delete_docs(spark, ixdir, [30 + r])
+        raw += 3 + len(late) + 1
+        t = tombstone_table(ixdir)
+        assert t.num_rows - t.column("exact_segment").null_count == len(late), r
+        assert t.num_rows == raw + len(late), r
+        assert tombstones(spark, ixdir).count() == t.num_rows, r
+        ix = MaterializedIndex(spark, ixdir)
+        _assert_liveness_agrees(ix)
+        hits = {x["doc_id"] for x in Searcher(ix, "bm25").search(
+            TermQuery("text", f"second{r}"), 100).collect()}
+        assert hits == set(late), r
 
 
 def _new_broadcasts(spark, before):
@@ -146,8 +191,13 @@ def _new_broadcasts(spark, before):
 def test_phrase_searches_broadcast_no_tombstone_relation(spark, tmp_path, monkeypatch):
     """A liveness anti-join broadcasts a hash relation of at least 1 MB
     per execution (its first page), however few tombstones there are;
-    with 20 tombstones the literal predicate leaves no such block."""
+    with 20 tombstones the literal predicate leaves no such block.
+    The searches run in Spark (selective phrases are answered on the
+    driver, where no plan exists)."""
     from golucene_spark.index import deletes
+    from golucene_spark.search import topk
+
+    monkeypatch.setattr(topk, "DRIVER_MAX_DF", -1)
 
     rows = [(i, f"quick brown fox {['red', 'green', 'blue'][i % 3]} jumps over lazy dogs",
              "en", "web") for i in range(80)]

@@ -24,7 +24,7 @@ from golucene_spark.index.builder import IndexBuilder, dead_segments
 from golucene_spark.index.deletes import delete_docs, delete_by_query, update_documents
 from golucene_spark.index.merge import merge_segments
 from golucene_spark.search import Searcher, parse_query
-from golucene_spark.search.ast import MatchAllQuery, TermQuery
+from golucene_spark.search.ast import MatchAllQuery, PhraseQuery, TermQuery
 from golucene_spark.streaming.nrt import incremental_index_batch
 
 
@@ -136,10 +136,17 @@ def test_lifecycle_fuzz(spark, tmp_path_factory, placement, flush_placement):
             # the marker token matches EXACTLY the updated docs' newest
             # versions — stale versions must be invisible
             s = Searcher(MaterializedIndex(spark, ixdir), "bm25")
+            phrase = PhraseQuery("content", (marker, "fresh"))
+            fuzzy = parse_query("content:parse~1", default_field="content",
+                                analyzer="simple")
+            ranked = []
             for where in placement():
-                hits = {r["doc_id"]
-                        for r in s.search(TermQuery("content", marker), 1000).collect()}
-                assert hits == set(targets), (where, marker, hits, targets)
+                for q in (TermQuery("content", marker), phrase):
+                    hits = {r["doc_id"] for r in s.search(q, 1000).collect()}
+                    assert hits == set(targets), (where, q, hits, targets)
+                ranked.append([(r["doc_id"], round(r["score"], 9))
+                               for r in s.search(fuzzy, 20).collect()])
+            assert ranked[0] == ranked[1] and ranked[0], ranked
         elif op == "delete_ids":
             if not live:
                 continue
@@ -199,7 +206,9 @@ def test_lifecycle_fuzz(spark, tmp_path_factory, placement, flush_placement):
     s_new = Searcher(MaterializedIndex(spark, fresh_dir), "bm25")
 
     for qs in ["content:parse", "content:buffer OR content:index",
-               "content:fresh", "content:parse AND NOT content:return"]:
+               "content:fresh", "content:parse AND NOT content:return",
+               'content:"return if"', 'content:"parse for"~2', "content:buffer~1",
+               "content:tokenize~2"]:
         q = parse_query(qs, default_field="content", analyzer="simple")
         for where in placement():
             a = [(r["doc_id"], round(r["score"], 9))

@@ -215,14 +215,14 @@ CHUNK_TABLES = ("postings", "term_dict", "doc_stats", "doc_meta", "term_vectors"
 def _option_spec(variant):
     """FieldSpec options a flush writes differently: payloads (with the
     whitespace analyzer) and boost_col, or omit_norms and
-    positions=False.  One text field each: verify_index's sha check
-    pairs doc_meta's one hash with every doc_stats field."""
-    text = {
-        "payloads": FieldSpec("content", "content", True, payloads=True, boost_col="boost"),
-        "omit_norms": FieldSpec("title", "title", True, omit_norms=True, positions=False),
-    }[variant]
+    positions=False, or both as two text fields (doc_meta hashes the
+    first text field only)."""
+    payloads = FieldSpec("content", "content", True, payloads=True, boost_col="boost")
+    omit_norms = FieldSpec("title", "title", True, omit_norms=True, positions=False)
+    text = {"payloads": [payloads], "omit_norms": [omit_norms],
+            "two_fields": [omit_norms, payloads]}[variant]
     return CorpusSpec(
-        text_fields=[text], keyword_fields=[FieldSpec("lang", "lang", False)],
+        text_fields=text, keyword_fields=[FieldSpec("lang", "lang", False)],
         key_cols=["doc_id"], id_col="doc_id", meta_cols=["lang"],
     )
 
@@ -261,7 +261,8 @@ def _chunk(spark, ixdir, chunk):
     return out
 
 
-@pytest.mark.parametrize("variant,wand_tv", [("payloads", True), ("omit_norms", False)])
+@pytest.mark.parametrize("variant,wand_tv", [
+    ("payloads", True), ("omit_norms", False), ("two_fields", True)])
 def test_flush_placements_write_identical_chunks(spark, tmp_path, flush_placement,
                                                  variant, wand_tv):
     spec = _option_spec(variant)
@@ -269,6 +270,8 @@ def test_flush_placements_write_identical_chunks(spark, tmp_path, flush_placemen
     IndexBuilder(spark, spec, analyzer="whitespace", num_segments=2, wand_layout=wand_tv,
                  store_term_vectors=wand_tv).build(
         spark.createDataFrame(_option_pdf(range(150))), base)
+    report = verify_index(spark, base)
+    assert report["sha256_rows_checked"] == 150 and report["sha256_mismatches"] == 0
     # 300 docs: "common" and w-terms span several 128-doc blocks
     batch = _option_pdf(range(1000, 1300), tag="y")
     got = {}
@@ -279,7 +282,7 @@ def test_flush_placements_write_identical_chunks(spark, tmp_path, flush_placemen
                                       analyzer="whitespace")
         assert (rec["n_docs"], rec["flush"]) == (300, where)
         got[where] = _chunk(spark, ixdir, rec["chunk"])
-        verify_index(spark, ixdir)
+        assert verify_index(spark, ixdir)["sha256_rows_checked"] == 450
         got[where]["field_stats"] = (None, read_field_stats(ixdir))
     assert set(got["driver"]) == set(got["spark"])
     assert ("term_vectors" in got["driver"]) == wand_tv

@@ -14,9 +14,12 @@ from golucene_spark.index import (CorpusSpec, IndexBuilder, LogicalIndex,
                                   MaterializedIndex, MultiIndex)
 from golucene_spark.search import Searcher, cache, parse_query
 
+# the phrase-in-boolean shapes keep the Spark placement (and so fill the
+# plan kind) on this small index; every other shape is driver-placed
 QUERIES = ["text:data", "text:data OR text:table", "text:data AND text:query",
            "text:da*", "text:query AND NOT text:table", "text:model~1",
-           "text:table OR text:model OR text:join"]
+           "text:table OR text:model OR text:join",
+           'text:"data table" OR text:join', 'text:"query data"~2 AND text:table']
 
 
 @pytest.fixture(scope="module")
