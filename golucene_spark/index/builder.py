@@ -36,6 +36,7 @@ Design points vs the reference:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import math
@@ -939,21 +940,12 @@ class IndexBuilder:
         self.wand_layout = wand_layout
 
     # -- manifest helpers (the segments_N generation protocol analogue) --
-    @staticmethod
-    def _manifest_dir(index_dir):
-        return os.path.join(index_dir, "manifest")
-
     def _committed_chunks(self, index_dir) -> dict[int, dict]:
         return {rec["chunk"]: rec for rec in read_manifest(index_dir)
                 if rec.get("status") == "committed"}
 
     def _commit_chunk(self, index_dir, rec: dict):
-        d = self._manifest_dir(index_dir)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".chunk-{rec['chunk']:05d}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, os.path.join(d, f"chunk-{rec['chunk']:05d}.json"))
+        commit_record(index_dir, f"chunk-{rec['chunk']:05d}", rec)
 
     def build(
         self,
@@ -1233,6 +1225,20 @@ def read_manifest(index_dir: str) -> list[dict]:
     return out
 
 
+def commit_record(index_dir: str, name: str, rec: dict) -> dict:
+    """Commit one manifest record as ``manifest/<name>.json``: written
+    under a hidden name and renamed into place, so a reader never reads
+    a partial record.  Every writer commits through here, after the
+    files the record names are complete."""
+    mdir = os.path.join(index_dir, "manifest")
+    os.makedirs(mdir, exist_ok=True)
+    tmp = os.path.join(mdir, f".{name}.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump(rec, f)
+    os.replace(tmp, os.path.join(mdir, f"{name}.json"))
+    return rec
+
+
 def dead_segments(index_dir: str, records: list[dict] | None = None) -> set[int]:
     """Segment ids superseded by merge records in the manifest
     (``records``: the manifest already read, else it is read here).
@@ -1250,32 +1256,123 @@ def dead_segments(index_dir: str, records: list[dict] | None = None) -> set[int]
     }
 
 
+def _tombstone_record(rec: dict) -> bool:
+    # by name: older delete records carry kind "ids" or "query"
+    return str(rec.get("chunk")).startswith("tombstones-")
+
+
+def data_records(records: list[dict]) -> list[dict]:
+    """The committed records of segment-data chunks: build chunks, NRT
+    and update flushes, merges (not tombstone generations, not the
+    trigram table)."""
+    return [r for r in records if r.get("status") == "committed"
+            and r.get("kind") != "trigram" and not _tombstone_record(r)]
+
+
+def segments_in(ids, negate: bool = False):
+    """The Column ``segment_id [NOT] IN (ids)`` as one SQL expression
+    (a Column per literal id would cost one py4j round trip each)."""
+    return F.expr(f"segment_id {'NOT ' if negate else ''}IN ({', '.join(str(int(s)) for s in ids)})")
+
+
+def _record_live(rec: dict, dead: set[int]) -> bool:
+    """Whether a data record's chunk holds a segment no merge consumed:
+    a merge's output, a flush's segment, or any of a build chunk's
+    segments (a record naming none of them counts as live)."""
+    if rec.get("kind") == "merge":
+        segs = [rec["new_segment_id"]]
+    elif "segment_id" in rec:
+        segs = [rec["segment_id"]]
+    elif "segments" in rec:
+        segs = list(rec["segments"])
+    else:
+        return True
+    return any(int(s) not in dead for s in segs)
+
+
+def _list_data_files(dirs: list[str], kind: str | None = None) -> list[str]:
+    """The data files under ``dirs``, sorted: one Arrow filesystem
+    listing per directory, a missing one lists nothing.  Names starting
+    with "." or "_" are skipped at every level, as Spark and Arrow skip
+    them (in-flight temp files, _SUCCESS, a crashed job's _temporary/).
+    ``kind``: only that ``kind=`` partition's files (a layout without
+    the partition keeps every file)."""
+    import pyarrow.fs as pafs
+
+    fs = pafs.LocalFileSystem()
+    out = []
+    for d in dirs:
+        for info in fs.get_file_info(pafs.FileSelector(d, recursive=True, allow_not_found=True)):
+            if info.type != pafs.FileType.File:
+                continue
+            parts = os.path.relpath(info.path, d).split(os.sep)
+            if any(p.startswith((".", "_")) for p in parts):
+                continue
+            if kind and any(p.startswith("kind=") and p != f"kind={kind}" for p in parts):
+                continue
+            out.append(info.path)
+    return sorted(out)
+
+
+def table_files(index_dir: str, table: str, records: list[dict],
+                dead: set[int] | None = None, kind: str | None = None) -> list[str]:
+    """The data files of ``table`` in the snapshot the manifest
+    ``records`` commit (``dead``: their dead_segments, if already
+    computed; ``kind``: only that postings partition), the segments_N
+    role (segmentInfos.go:21-135): an open reads exactly the files its
+    commit point names.
+
+    - postings, term_dict, doc_stats: the chunks of the data records
+      that still hold a live segment; when those have no file, every
+      committed chunk's (all dead, so a reader's dead-segment filter
+      empties them and the frame keeps the table's schema)
+    - doc_meta, term_vectors: every committed build and flush chunk
+      (merges never rewrite them)
+    - tombstones: the generation of every delete record
+
+    A chunk directory no committed record names (a flush in flight, or
+    one that crashed before its commit) is never listed."""
+    if table == "tombstones":
+        return _list_data_files([
+            os.path.join(index_dir, "tombstones", "gen=" + r["chunk"].split("-", 1)[1])
+            for r in records if _tombstone_record(r) and r.get("status") == "committed"
+        ])
+    data = data_records(records)
+    chunk = lambda r: os.path.join(index_dir, table, f"chunk={r['chunk']}")
+    if table in ("doc_meta", "term_vectors"):
+        return _list_data_files([chunk(r) for r in data if r.get("kind") != "merge"])
+    dead = dead_segments(index_dir, records) if dead is None else dead
+    return (_list_data_files([chunk(r) for r in data if _record_live(r, dead)], kind)
+            or _list_data_files([chunk(r) for r in data], kind))
+
+
 def _arrow_dataset(path):
-    """pyarrow dataset over a Spark-written parquet directory (or a list
-    of its files), its files listed once, here; None when it holds no
-    data file.  The schema is the UNION of the files' schemas (what
-    Spark's mergeSchema resolves): a column absent from some chunk reads
-    as null in that chunk's rows."""
+    """pyarrow dataset over a Spark-written parquet directory (its data
+    files listed here, ``_list_data_files``) or a list of its files;
+    None when there is no data file.  The schema is the UNION of the
+    files' schemas (what Spark's mergeSchema resolves): a column absent
+    from some chunk reads as null in that chunk's rows."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
-    d = ds.dataset(path, format="parquet")
-    frags = list(d.get_fragments())
-    if not frags:
+    files = _list_data_files([path]) if isinstance(path, str) else path
+    if not files:
         return None
+    d = ds.dataset(files, format="parquet")
+    frags = list(d.get_fragments())
     # unify_schemas also relaxes a list's element nullability, which
     # Spark writes differently before and after a merge
     schema = pa.unify_schemas([f.physical_schema for f in frags])
     return ds.FileSystemDataset(frags, schema, d.format, d.filesystem)
 
 
-# session confs read_table holds while Spark lists a table: list on the
-# driver however many directories the table spans (Spark lists more
-# than parallelPartitionDiscovery.threshold paths with a job), and keep
-# the listing out of the session's shared file-status cache (each read
-# lists under a fresh cache client, so its entries are never hit again
-# and only leave at the cache's 250 MB bound: every reopen would grow
-# the driver heap)
+# session confs read_table holds while Spark resolves a table's files:
+# check them on the driver however many there are (Spark lists more
+# than parallelPartitionDiscovery.threshold paths with a job, and an
+# explicit file counts as a path), and keep the listing out of the
+# session's shared file-status cache (each read lists under a fresh
+# cache client, so its entries are never hit again and only leave at
+# the cache's 250 MB bound: every reopen would grow the driver heap)
 _READ_CONF = {
     "spark.sql.sources.parallelPartitionDiscovery.threshold": str(1 << 30),
     "spark.sql.hive.manageFilesourcePartitions": "false",
@@ -1284,32 +1381,35 @@ _READ_LOCK = threading.Lock()
 
 
 def read_table(spark: SparkSession, path: str, dataset=None) -> DataFrame:
-    """``spark.read.parquet(path)`` of an index table without a Spark
-    job: the data schema is the Arrow union of the files' footers
-    (``dataset``, else ``_arrow_dataset(path)``: what mergeSchema
-    infers, read on the driver) instead of Spark's footer-reading
-    inference job, and Spark lists the files under ``_READ_CONF``.
-    Partition columns (chunk, kind, gen) are still inferred by Spark
-    from the directory names.  A table without data files, or a column
-    type Spark cannot take from Arrow, falls back to the inferring
-    read."""
+    """The Spark frame of an index table, built without a Spark job.
+    ``spark.read`` gets the table's data files by name (``dataset``'s,
+    else every data file under ``path``, listed with Arrow:
+    ``_arrow_dataset``), ``path`` as the base path their partition
+    columns (chunk, kind, gen) are inferred from, and the Arrow union
+    of their footers as the data schema (what mergeSchema infers, read
+    on the driver instead of by Spark's inference job); it resolves the
+    files under ``_READ_CONF``.  A directory without data files, or a
+    column type Spark cannot take from Arrow, falls back to the
+    inferring read."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     d = _arrow_dataset(path) if dataset is None else dataset
-    reader = spark.read.option("mergeSchema", "true")
-    if d is not None:
-        try:
-            reader = spark.read.schema(from_arrow_schema(d.schema))
-        except TypeError:
-            pass
-    # the file index reads the confs when it lists, i.e. in this call;
-    # the lock keeps concurrent reads from restoring each other's values
+    if d is None:
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    try:
+        reader = spark.read.schema(from_arrow_schema(d.schema))
+    except TypeError:
+        reader = spark.read.option("mergeSchema", "true")
+    reader = reader.option("basePath", path)
+    # the file index reads the confs when it resolves the files, i.e.
+    # in this call; the lock keeps concurrent reads from restoring each
+    # other's values
     with _READ_LOCK:
         old = {k: spark.conf.get(k) for k in _READ_CONF}
         for k, v in _READ_CONF.items():
             spark.conf.set(k, v)
         try:
-            return reader.parquet(path)
+            return reader.parquet(*d.files)
         finally:
             for k, v in old.items():
                 spark.conf.set(k, v)
@@ -1395,21 +1495,6 @@ def write_field_stats(index_dir: str, rows: list[dict], omit_norms: set[str]) ->
             os.remove(path)
 
 
-def _posting_files(index_dir: str) -> list[str]:
-    """Index-relative paths of the posting data files (the kind=post
-    partitions; layouts without a kind partition keep every file),
-    sorted: the same names the manifest's term_ranges key on."""
-    root = os.path.join(index_dir, "postings")
-    out = []
-    for d, subdirs, files in os.walk(root):
-        subdirs[:] = [x for x in subdirs if not x.startswith("kind=") or x == "kind=post"]
-        out.extend(
-            os.path.relpath(os.path.join(d, f), index_dir) for f in files
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    return sorted(out)
-
-
 # postings_arrays' rows
 _POSTING_ROWS = pa.schema([
     ("term", pa.string()), ("doc_id", pa.int64()), ("freq", pa.int32()),
@@ -1425,108 +1510,151 @@ _SPREAD_AGGS = (("bmf_min", "min"), ("bmf_max", "max"),
 
 class MaterializedIndex:
     """Reader over an index built by IndexBuilder (term-pruned scans).
-    Reads the LIVE segment set: segments superseded by merges (manifest
-    kind=merge records) are filtered out — the segments_N visibility
-    protocol (segmentInfos.go:21-135) as a manifest + filter.
 
-    The files listed at open ARE the snapshot: the Spark frames
-    (``postings``, ``term_dict``, ...) and the driver-side Arrow
-    datasets (term_dict for the term-stats seek, postings for the
-    driver top-k kernel, tombstones) are listed once, here, and both
-    search placements read them.  Reassigning a frame on an open index
-    (``ix.postings = ...``) changes only what the Spark placement reads;
-    the driver placement keeps reading the files listed at open."""
+    The snapshot is the set of files the manifest names at open, the
+    segments_N visibility protocol (segmentInfos.go:21-135, nrt.go:15-40):
+    the chunks of the committed records that still hold a live segment,
+    every committed doc_meta chunk (merges never rewrite doc_meta), the
+    tombstone generations of the delete records and a fresh trigram
+    table (``table_files``).  The open reads the manifest, lists those
+    files once with Arrow and reads the tombstones; it starts no Spark
+    job.  A chunk directory without a committed record (a flush in
+    flight, or one that crashed) is not part of the snapshot, and rows
+    of segments a merge superseded inside a live build chunk are
+    filtered out at read.
+
+    Both search placements read the files listed at open, each built on
+    first use: the driver-side Arrow datasets (``_term_dict_ds`` for the
+    term-stats seek, ``_postings_ds`` for the driver top-k kernel) and
+    the Spark frames (``postings``, ``term_dict``, ``doc_stats``,
+    ``doc_meta``, ``_tombstones``, ``trigram``), so a commit after the
+    open never shows through and a driver-placed search builds no
+    frame.  Assigning a frame on an open index (``ix.postings = ...``)
+    changes only what the Spark placement reads; the driver placement
+    keeps reading the files listed at open."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
+        from .deletes import tombstone_table
+        from .trigram import trigram_files
+
         self.spark = spark
         self.index_dir = index_dir
-        # each table's schema is the Arrow union of its files' footers,
-        # the schema mergeSchema resolves for mixed old/new chunks
-        # (pre-/post-WAND-metadata, merge outputs), read on the driver:
-        # opening a snapshot starts no Spark job (read_table)
-        table = lambda name, d=None: read_table(spark, os.path.join(index_dir, name), d)
-        # driver-side terms index (the .tip/.tim seek role): the same
-        # term_dict files, listed once at open — this listing IS the
-        # snapshot, like spark.read.parquet's listing below
-        self._term_dict_ds = _arrow_dataset(os.path.join(index_dir, "term_dict"))
-        self.postings = table("postings")
-        if "kind" in self.postings.columns:
-            self.postings = self.postings.filter(F.col("kind") == "post").drop("kind")
-        self.term_dict = table("term_dict", self._term_dict_ds)
-        self.doc_stats = table("doc_stats")
-        self.doc_meta = table("doc_meta")
-        # the kind=post posting files, the driver top-k kernel's source
-        post_files = _posting_files(index_dir)
-        self._postings_ds = _arrow_dataset(
-            [os.path.join(index_dir, f) for f in post_files]
-        ) if post_files else None
-        records = read_manifest(index_dir)
-        self._dead = sorted(int(x) for x in dead_segments(index_dir, records))
-        if self._dead:
-            # one SQL expression, not one py4j call per dead segment id
-            live = F.expr(f"segment_id NOT IN ({', '.join(map(str, self._dead))})")
-            alive = lambda df: df.filter(live)
-            self.postings = alive(self.postings)
-            self.term_dict = alive(self.term_dict)
-            self.doc_stats = alive(self.doc_stats)
+        records = self._records = read_manifest(index_dir)
+        dead = dead_segments(index_dir, records)
+        self._dead = sorted(dead)
+        self._files = {t: table_files(index_dir, t, records, dead, "post" if t == "postings" else None)
+                       for t in ("postings", "term_dict", "doc_stats", "doc_meta", "tombstones")}
+        # optional trigram side table (sublinear seek for prefix-less
+        # wildcard/regexp patterns); no files when absent or stale
+        self._files["trigram"] = trigram_files(index_dir, records)
         # W12 deletes: tombstoned docs filtered at read time (liveDocs);
         # stats intentionally keep counting them until expunge (Lucene's
-        # numDocs vs maxDoc semantics)
-        from .deletes import tombstone_table, tombstones as _tombstones
-
-        self._tombstones = _tombstones(spark, index_dir, records)
-        # the same tombstones read with Arrow: the kernel's liveness mask
-        # and the Spark plans' literal liveness predicate
-        self._tomb_table = tombstone_table(index_dir, records)
-        # optional trigram side table (sublinear seek for prefix-less
-        # wildcard/regexp patterns); None when absent or stale
-        from .trigram import load_trigram_index
-
-        self.trigram = load_trigram_index(spark, index_dir)
+        # numDocs vs maxDoc semantics).  Read with Arrow: the driver
+        # kernel's liveness mask and the Spark plans' literal liveness
+        # predicate
+        self._tomb_table = tombstone_table(index_dir, records, self._files["tombstones"])
         self.last_multiterm_stats: dict | None = None
         # quantize_norms (from a record that actually carries it —
         # merge/tombstone records don't) + file-level term ranges (the
         # .tip role: range_layout builds record per-file [min_term,
-        # max_term]; pruning is enabled only when EVERY data chunk
+        # max_term]; pruning is enabled only when EVERY live data chunk
         # carries ranges, else full scan)
         self.quantized = bool(next(
             (r["quantize_norms"] for r in records if "quantize_norms" in r), True))
+        live = [r for r in data_records(records) if _record_live(r, dead)]
         self._term_ranges: dict[str, list] = {}
-        ranges_ok = True
-        for rec in records:
-            if rec.get("kind") == "delete":
-                continue
-            tr = rec.get("term_ranges")
-            if tr:
-                self._term_ranges.update(tr)
-            else:
-                ranges_ok = False
-        self._prune_files = ranges_ok and bool(self._term_ranges)
+        for rec in live:
+            self._term_ranges.update(rec.get("term_ranges") or {})
+        self._prune_files = bool(live) and all(r.get("term_ranges") for r in live)
         self.last_prune_stats: tuple | None = None
         self._field_stats = read_field_stats(index_dir)
         self.snapshot_cache = SnapshotCache()
 
+    # -- the snapshot's tables, built on first use over the files listed
+    # at open (functools.cached_property: assignment replaces them) --
+
+    @functools.cached_property
+    def _postings_ds(self):
+        # the kind=post posting files, the driver top-k kernel's source
+        return _arrow_dataset(self._files["postings"])
+
+    @functools.cached_property
+    def _term_dict_ds(self):
+        # driver-side terms index (the .tip/.tim seek role)
+        return _arrow_dataset(self._files["term_dict"])
+
+    def _frame(self, table: str, dataset=None) -> DataFrame:
+        """Spark frame over the snapshot's files of ``table``
+        (``dataset``: an Arrow dataset of some of them), without the
+        rows of dead segments where the table has them."""
+        d = _arrow_dataset(self._files[table]) if dataset is None else dataset
+        if d is None:
+            raise ValueError(f"the manifest of {self.index_dir} names no {table} file")
+        df = read_table(self.spark, os.path.join(self.index_dir, table), d)
+        if self._dead and table in ("postings", "term_dict", "doc_stats"):
+            df = df.filter(segments_in(self._dead, negate=True))
+        return df
+
+    @functools.cached_property
+    def postings(self) -> DataFrame:
+        return self._frame("postings", self._postings_ds).drop("kind")
+
+    @functools.cached_property
+    def term_dict(self) -> DataFrame:
+        return self._frame("term_dict", self._term_dict_ds)
+
+    @functools.cached_property
+    def doc_stats(self) -> DataFrame:
+        return self._frame("doc_stats")
+
+    @functools.cached_property
+    def doc_meta(self) -> DataFrame:
+        return self._frame("doc_meta")
+
+    @functools.cached_property
+    def _tombstones(self) -> DataFrame | None:
+        # the Spark twin of _tomb_table (filter_live's anti-join side)
+        from .deletes import tombstones
+
+        if self._tomb_table is None:
+            return None
+        return tombstones(self.spark, self.index_dir, self._records,
+                          _arrow_dataset(self._files["tombstones"]))
+
+    @functools.cached_property
+    def trigram(self) -> DataFrame | None:
+        from .trigram import load_trigram_index
+
+        return load_trigram_index(self.spark, self.index_dir, self._files["trigram"])
+
+    def _pruned_postings(self, field: str, terms: list[str]):
+        """The snapshot's posting files whose manifest term_ranges can
+        hold (field, term in terms), as an Arrow dataset (file-level
+        pruning, the FST .tip seek re-expressed); None when the index
+        has no ranges to prune by."""
+        import pyarrow.dataset as ds
+
+        src = self._postings_ds
+        if src is None or not self._prune_files:
+            return None
+        frags = [f for f in src.get_fragments()
+                 if (rel := os.path.relpath(f.path, self.index_dir)) in self._term_ranges
+                 and _ranges_may_contain(self._term_ranges[rel], field, terms)]
+        self.last_prune_stats = (len(self._term_ranges), len(frags))
+        return ds.FileSystemDataset(frags, src.schema, src.format, src.filesystem)
+
     def postings_frame(self, field: str, terms: list[str]) -> DataFrame:
         """Block-level posting rows for the given terms, reading ONLY
-        the parquet files whose [min_term, max_term] footer range can
-        contain one of them (file-level pruning via the manifest's
-        term_ranges — the FST .tip seek re-expressed).  Falls back to
-        the full term-pruned scan when ranges are unavailable."""
-        if not self._prune_files:
-            return self.postings.filter(
-                (F.col("field") == field) & F.col("term").isin(terms)
-            )
-        files = [
-            os.path.join(self.index_dir, rel)
-            for rel, ranges in self._term_ranges.items()
-            if _ranges_may_contain(ranges, field, terms)
-        ]
-        self.last_prune_stats = (len(self._term_ranges), len(files))
-        if not files:
+        the parquet files whose [min_term, max_term] range can contain
+        one of them (``_pruned_postings``).  Falls back to the full
+        term-pruned scan when ranges are unavailable."""
+        pruned = self._pruned_postings(field, terms)
+        if pruned is None:
+            df = self.postings
+        elif not pruned.files:
             return self.postings.filter(F.lit(False))
-        df = self.spark.read.parquet(*files)
-        if self._dead:
-            df = df.filter(~F.col("segment_id").isin(self._dead))
+        else:
+            df = self._frame("postings", pruned).drop("kind")
         return df.filter((F.col("field") == field) & F.col("term").isin(terms))
 
     def postings_for_terms(self, field: str, terms: list[str],
@@ -1573,15 +1701,10 @@ class MaterializedIndex:
         indexed without positions)."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.dataset as ds
 
-        src = self._postings_ds
-        if src is not None and self._prune_files:
-            by_rel = {os.path.relpath(f.path, self.index_dir): f for f in src.get_fragments()}
-            frags = [f for rel, f in by_rel.items() if rel in self._term_ranges
-                     and _ranges_may_contain(self._term_ranges[rel], field, terms)]
-            self.last_prune_stats = (len(self._term_ranges), len(frags))
-            src = ds.FileSystemDataset(frags, src.schema, src.format, src.filesystem)
+        src = self._pruned_postings(field, terms)
+        if src is None:
+            src = self._postings_ds
         schema = _POSTING_ROWS
         lists = ["doc_ids", "freqs", "dlqs", "norm_bytes"]
         if with_positions:
@@ -1611,13 +1734,16 @@ class MaterializedIndex:
         """TermContext seek (core/index/terms.go:60-120) on the driver:
         {term: {df, ttf[, bmf_min, bmf_max, bdlq_min, bdlq_max]}} for the
         terms the snapshot holds, summed over live segments.  A vectorized
-        read of the term_dict files listed at open: the (field, term)
-        predicate prunes row groups of the (field, term)-sorted chunks,
-        and Arrow's group_by folds the per-segment rows.  No Spark job;
-        the same rows as ``term_stats(field, terms).collect()``."""
+        read of the term_dict files listed at open, filtered by the
+        (field, term) predicate, and Arrow's group_by folds the
+        per-segment rows.  The predicate prunes nothing: pyarrow 16.1
+        skips no row group on an ``isin`` and each chunk file is one row
+        group, so the seek decodes the field and term columns of every
+        term_dict file of the snapshot.  No Spark job; the same rows as
+        ``term_stats(field, terms).collect()``."""
         import pyarrow.compute as pc
 
-        if not terms:
+        if not terms or self._term_dict_ds is None:
             return {}
         flt = (pc.field("field") == field) & pc.field("term").isin(list(terms))
         if self._dead:
@@ -1651,7 +1777,7 @@ class MaterializedIndex:
         frame is returned as-is (no window shuffle on the common
         path)."""
         dm = self.doc_meta
-        if self._tombstones is None:
+        if self._tomb_table is None:
             return dm
         from pyspark.sql import Window
 
@@ -1667,11 +1793,10 @@ class MaterializedIndex:
         core/document/document.go:75): the doc_meta row as a dict, or
         None for an unknown/deleted doc.  For updated docs the NEWEST
         version (highest segment) is returned."""
-        if self._tombstones is not None:
-            full = self._tombstones.filter(
-                (F.col("doc_id") == int(doc_id)) & F.col("before_segment").isNull()
-            )
-            if full.count():
+        if self._tomb_table is not None:
+            from .deletes import _tomb_groups
+
+            if int(doc_id) in _tomb_groups(self._tomb_table)[0]:  # fully deleted
                 return None
         rows = (
             self.doc_meta.filter(F.col("doc_id") == int(doc_id))
@@ -1706,13 +1831,14 @@ class MaterializedIndex:
         their segment is merged away (doc_ids are stable across merges;
         this table is doc-addressed), but liveDocs/update tombstones DO
         apply — a superseded version's rows vanish exactly like its
-        postings."""
-        path = os.path.join(self.index_dir, "term_vectors")
-        if not os.path.isdir(path):
+        postings.  Reads the committed chunks of the snapshot's
+        manifest."""
+        d = _arrow_dataset(table_files(self.index_dir, "term_vectors", self._records))
+        if d is None:
             raise ValueError(
                 "index was built without store_term_vectors=True"
             )
-        tv = read_table(self.spark, path)
+        tv = read_table(self.spark, os.path.join(self.index_dir, "term_vectors"), d)
         if field is not None:
             tv = tv.filter(F.col("field") == field)
         if doc_ids is not None:

@@ -20,11 +20,12 @@ Spark plans filter with a literal predicate built from it
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .builder import commit_record, read_manifest
 
 # tombstone rows up to which a Spark plan filters liveness with a
 # literal predicate (In/InSet over the ids) instead of an anti-join: the
@@ -39,7 +40,7 @@ def _tombstone_dir(index_dir: str) -> str:
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> dict:
     """Tombstone explicit doc ids (delete-by-id)."""
-    return _append_tombstones(index_dir, doc_ids, {"kind": "ids"})
+    return _append_tombstones(index_dir, doc_ids, {"reason": "ids"})
 
 
 def delete_by_query(spark: SparkSession, index_dir: str, query, searcher=None) -> dict:
@@ -54,7 +55,7 @@ def delete_by_query(spark: SparkSession, index_dir: str, query, searcher=None) -
 
         query = parse_query(query)
     ids = [r["doc_id"] for r in s.score_frame(query).select("doc_id").distinct().collect()]
-    return _append_tombstones(index_dir, ids, {"kind": "query"})
+    return _append_tombstones(index_dir, ids, {"reason": "query"})
 
 
 def _append_tombstones(index_dir: str, doc_ids, info: dict,
@@ -62,7 +63,9 @@ def _append_tombstones(index_dir: str, doc_ids, info: dict,
     """Commit one tombstone generation: ``gen=<g>/part-0.parquet``
     (doc_id, before_segment), written under a hidden name and renamed,
     so a reader listing tombstones/ never sees a partial file.  The
-    manifest record's ``n`` counts the distinct ids."""
+    manifest record (kind "delete", named ``tombstones-<g>``) commits
+    it; its ``n`` counts the distinct ids and ``info`` adds the
+    delete's ``reason``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -87,19 +90,13 @@ def _append_tombstones(index_dir: str, doc_ids, info: dict,
     tmp = os.path.join(out, ".part-0.parquet.tmp")
     pq.write_table(table, tmp, store_schema=False)
     os.replace(tmp, os.path.join(out, "part-0.parquet"))
-    mdir = os.path.join(index_dir, "manifest")
-    os.makedirs(mdir, exist_ok=True)
-    rec = {"chunk": f"tombstones-{gen}", "status": "committed", "kind": "delete",
-           "n": len(ids), **info}
-    tmp = os.path.join(mdir, f".tombstones-{gen}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(mdir, f"tombstones-{gen}.json"))
-    return rec
+    return commit_record(index_dir, f"tombstones-{gen}", {
+        "chunk": f"tombstones-{gen}", "status": "committed", "kind": "delete",
+        "n": len(ids), **info})
 
 
 def tombstones(spark: SparkSession, index_dir: str,
-               records: list[dict] | None = None) -> DataFrame | None:
+               records: list[dict] | None = None, dataset=None) -> DataFrame | None:
     """(doc_id, before_segment, exact_segment):
 
     - before_segment NULL (and exact NULL) kills every version of the
@@ -117,13 +114,17 @@ def tombstones(spark: SparkSession, index_dir: str,
       scoped-expunge path, which applies the then-existing scoped
       tombstones physically.)
 
-    ``records``: the manifest already read, else it is read here."""
+    ``records``: the manifest already read, else it is read here;
+    ``dataset``: the Arrow dataset of their tombstone files, else they
+    are listed here (``_tombstone_dataset``).  None when the records
+    name no tombstone file."""
     from .builder import read_table
 
-    d = _tombstone_dir(index_dir)
-    if not os.path.isdir(d):
+    records = read_manifest(index_dir) if records is None else records
+    d = _tombstone_dataset(index_dir, records) if dataset is None else dataset
+    if d is None:
         return None
-    t = read_table(spark, d)
+    t = read_table(spark, _tombstone_dir(index_dir), d)
     if "before_segment" not in t.columns:  # pre-update-era tombstones
         t = t.withColumn("before_segment", F.lit(None).cast("long"))
     t = t.select("doc_id", "before_segment").distinct()
@@ -147,19 +148,27 @@ def tombstones(spark: SparkSession, index_dir: str,
     return t
 
 
-def tombstone_table(index_dir: str, records: list[dict] | None = None):
+def _tombstone_dataset(index_dir: str, records: list[dict], files=None):
+    """Arrow dataset of the tombstone files the delete records name
+    (``files``: already listed), or None when there are none."""
+    from .builder import _arrow_dataset, table_files
+
+    return _arrow_dataset(table_files(index_dir, "tombstones", records)
+                          if files is None else files)
+
+
+def tombstone_table(index_dir: str, records: list[dict] | None = None, files=None):
     """The snapshot's tombstones as an Arrow table (doc_id,
     before_segment, exact_segment) with ``tombstones()``'s rows, read
-    on the driver, or None when the index has none.  The exact_segment
-    rows for merged segments are synthesized from the manifest as
+    on the driver, or None when the index has none (``files``: the
+    records' tombstone files, already listed).  The exact_segment rows
+    for merged segments are synthesized from the manifest as
     ``tombstones()`` does."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from .builder import _arrow_dataset
-
-    d = _tombstone_dir(index_dir)
-    t = _arrow_dataset(d) if os.path.isdir(d) else None
+    records = read_manifest(index_dir) if records is None else records
+    t = _tombstone_dataset(index_dir, records, files)
     if t is None:
         return None
     scoped = "before_segment" in t.schema.names  # absent before updates existed
@@ -184,7 +193,7 @@ def _live_merged_origins(index_dir: str, records: list[dict] | None):
     output a later merge consumed holds no row any reader sees, so an
     exact_segment tombstone for it would only grow the table (and push
     ``live_rows`` past LITERAL_TOMBSTONES) with every merge round."""
-    from .builder import dead_segments, read_manifest
+    from .builder import dead_segments
     from .merge import merged_origin_ranges
 
     records = read_manifest(index_dir) if records is None else records
@@ -241,19 +250,19 @@ def live_predicate(table, seg_col: str | None = "segment_id"):
 
 
 def live_rows(index, frame: DataFrame, seg_col: str = "segment_id") -> DataFrame:
-    """``frame`` without the rows the index's tombstones kill: a literal
-    predicate while the snapshot holds at most LITERAL_TOMBSTONES rows,
-    else filter_live's anti-join.  Indexes without tombstones return
-    ``frame`` as-is."""
-    tomb = getattr(index, "_tombstones", None)
-    if tomb is None:
-        return frame
+    """``frame`` without the rows the index's tombstones kill, decided
+    from the Arrow ``_tomb_table`` read at open: a literal predicate
+    while it holds at most LITERAL_TOMBSTONES rows, else filter_live's
+    anti-join against the Spark ``_tombstones`` frame (built only
+    then).  Indexes without tombstones return ``frame`` as-is."""
     table = getattr(index, "_tomb_table", None)
-    if table is not None and table.num_rows <= LITERAL_TOMBSTONES:
+    if table is None:
+        return frame
+    if table.num_rows <= LITERAL_TOMBSTONES:
         return frame.filter(
             live_predicate(table, seg_col if seg_col in frame.columns else None)
         )
-    return filter_live(frame, tomb, seg_col)
+    return filter_live(frame, index._tombstones, seg_col)
 
 
 def filter_live(frame: DataFrame, tomb: DataFrame | None,
@@ -295,7 +304,6 @@ def update_documents(spark: SparkSession, index_dir: str, df: DataFrame,
     update visibility, without rewriting any old segment.  An empty
     ``df`` commits nothing and returns None."""
     from ..streaming.nrt import _flush_batch
-    from .builder import read_manifest
 
     assert spec.id_col, "update_documents requires a stable id column"
     epoch = max((int(rec.get("epoch", 0)) + 1 for rec in read_manifest(index_dir)
@@ -306,7 +314,7 @@ def update_documents(spark: SparkSession, index_dir: str, df: DataFrame,
         return None
     rec, ids = flushed
     _append_tombstones(
-        index_dir, ids, {"kind": "delete", "reason": "update"},
+        index_dir, ids, {"reason": "update"},
         before_segment=rec["segment_id"],
     )
     return rec

@@ -20,13 +20,13 @@ we never shuffle or collect the postings themselves, only block rows).
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .builder import read_manifest, read_table, term_dict_frame
+from .builder import (_arrow_dataset, commit_record, read_manifest, read_table, segments_in,
+                      table_files, term_dict_frame)
 
 MAX_MERGE_AT_ONCE = 10        # merge.go:370
 SEGS_PER_TIER = 10            # merge.go:377
@@ -80,6 +80,14 @@ def _strip_chunk(df: DataFrame) -> DataFrame:
     states then produce unmergeable footers (CANNOT_MERGE_SCHEMAS;
     caught by the round-5 lifecycle fuzz, seed 5)."""
     return df.drop("chunk") if "chunk" in df.columns else df
+
+
+def _live_table(spark: SparkSession, index_dir: str, table: str, records: list[dict]) -> DataFrame:
+    """``table`` over the files of the snapshot ``records`` commit
+    (``table_files``): a merge reads the chunks that still hold a live
+    segment, not every chunk the index ever wrote."""
+    return read_table(spark, os.path.join(index_dir, table),
+                      _arrow_dataset(table_files(index_dir, table, records)))
 
 
 def _merge_children(records: list[dict]) -> dict[int, list[int]]:
@@ -222,18 +230,21 @@ def merge_segments(
     # the explode path applying ONLY the scoped tombstones — plain
     # (before_segment NULL) deletes stay logical, preserving Lucene's
     # numDocs-vs-maxDoc visibility until a real expunge.
-    from .deletes import tombstones
+    import pyarrow.compute as pc
 
-    tomb = tombstones(spark, index_dir)
+    from .deletes import tombstone_table
+
+    records = read_manifest(index_dir)
+    tomb = tombstone_table(index_dir, records)
     # routing must compare EFFECTIVE (pre-merge original) ids: a merged
     # input segment sits at MERGE_ID_BASE+ but may contain versions from
     # original segments below an existing before_segment.
-    origin = merged_origin_ranges(index_dir)
+    origin = merged_origin_ranges(index_dir, records)
     eff_min = min(
         origin.get(int(s), (int(s), int(s)))[0] for s in segment_ids
     )
     if tomb is not None and eff_min < (
-        tomb.agg(F.max("before_segment")).collect()[0][0] or -(1 << 62)
+        pc.max(tomb["before_segment"]).as_py() or -(1 << 62)
     ):
         return _merge_expunge(
             spark, index_dir, segment_ids, new_segment_id, out_chunk,
@@ -242,8 +253,8 @@ def merge_segments(
     t0 = time.time()
     new_id = new_segment_id if new_segment_id is not None else _allocate_segment_id(index_dir, segment_ids)
     out_chunk = out_chunk or f"merge-{new_id}-{len(segment_ids)}"
-    post = read_table(spark, os.path.join(index_dir, "postings")).filter(
-        F.col("segment_id").isin(segment_ids)
+    post = _live_table(spark, index_dir, "postings", records).filter(
+        segments_in(segment_ids)
     )
     has_kind = "kind" in post.columns
     if not has_kind:
@@ -273,8 +284,8 @@ def merge_segments(
         os.path.join(index_dir, "postings", f"chunk={out_chunk}")
     )
 
-    td = read_table(spark, os.path.join(index_dir, "term_dict")).filter(
-        F.col("segment_id").isin(segment_ids)
+    td = _live_table(spark, index_dir, "term_dict", records).filter(
+        segments_in(segment_ids)
     )
     has_spread = "bmf_min" in td.columns
     spread_aggs = (
@@ -302,8 +313,8 @@ def merge_segments(
         os.path.join(index_dir, "term_dict", f"chunk={out_chunk}")
     )
 
-    ds = read_table(spark, os.path.join(index_dir, "doc_stats")).filter(
-        F.col("segment_id").isin(segment_ids)
+    ds = _live_table(spark, index_dir, "doc_stats", records).filter(
+        segments_in(segment_ids)
     ).withColumn("segment_id", F.lit(new_id).cast("int"))
     _strip_chunk(ds).write.mode("overwrite").parquet(
         os.path.join(index_dir, "doc_stats", f"chunk={out_chunk}")
@@ -319,10 +330,7 @@ def merge_segments(
         "new_segment_id": int(new_id),
         "wall_sec": round(time.time() - t0, 3),
     }
-    mdir = os.path.join(index_dir, "manifest")
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, f"{out_chunk}.json"), "w") as f:
-        json.dump(rec, f)
+    commit_record(index_dir, out_chunk, rec)
     # a merge adds no terms (output terms ⊆ union of input terms):
     # the trigram table only needs its freshness key bumped
     from .trigram import refresh_trigram_index
@@ -348,8 +356,9 @@ def _merge_expunge(spark, index_dir, segment_ids, new_segment_id, out_chunk,
         f"merge-{new_id}-{len(segment_ids)}" if scoped_only
         else f"expunge-{new_id}-{len(segment_ids)}"
     )
-    post = read_table(spark, os.path.join(index_dir, "postings")).filter(
-        F.col("segment_id").isin(segment_ids)
+    records = read_manifest(index_dir)
+    post = _live_table(spark, index_dir, "postings", records).filter(
+        segments_in(segment_ids)
     )
     zcols = ["doc_ids", "freqs", "dlqs", "norm_bytes"]
     if "positions" in post.columns:
@@ -373,7 +382,7 @@ def _merge_expunge(spark, index_dir, segment_ids, new_segment_id, out_chunk,
         F.col("e.dlqs").alias("dlq"),
         F.col("e.norm_bytes").alias("norm_byte"),
     )
-    tomb = tombstones(spark, index_dir)
+    tomb = tombstones(spark, index_dir, records)
     if tomb is not None and scoped_only:
         tomb = tomb.filter(F.col("before_segment").isNotNull())
     if tomb is not None:
@@ -408,8 +417,8 @@ def _merge_expunge(spark, index_dir, segment_ids, new_segment_id, out_chunk,
     )
     td = term_dict_frame(written)
     _strip_chunk(td).write.mode("overwrite").parquet(os.path.join(index_dir, "term_dict", f"chunk={out_chunk}"))
-    ds = read_table(spark, os.path.join(index_dir, "doc_stats")).filter(
-        F.col("segment_id").isin(segment_ids)
+    ds = _live_table(spark, index_dir, "doc_stats", records).filter(
+        segments_in(segment_ids)
     )
     if tomb is not None:
         from .deletes import filter_live
@@ -426,10 +435,7 @@ def _merge_expunge(spark, index_dir, segment_ids, new_segment_id, out_chunk,
         "new_segment_id": int(new_id),
         "wall_sec": round(time.time() - t0, 3),
     }
-    mdir = os.path.join(index_dir, "manifest")
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, f"{out_chunk}.json"), "w") as f:
-        json.dump(rec, f)
+    commit_record(index_dir, out_chunk, rec)
     refresh_field_stats(spark, index_dir)
     # expunge can only REMOVE terms — leftover trigram rows stay a
     # correct superset (candidates are still rlike- and postings-
@@ -445,12 +451,12 @@ def refresh_field_stats(spark: SparkSession, index_dir: str) -> None:
     set (post-merge/expunge), with the manifest's omitNorms fields."""
     from .builder import dead_segments, field_stats_rows, omit_norms_fields, write_field_stats
 
-    ds = read_table(spark, os.path.join(index_dir, "doc_stats"))
-    td = read_table(spark, os.path.join(index_dir, "term_dict"))
-    dead = dead_segments(index_dir)
+    records = read_manifest(index_dir)
+    ds = _live_table(spark, index_dir, "doc_stats", records)
+    td = _live_table(spark, index_dir, "term_dict", records)
+    dead = dead_segments(index_dir, records)
     if dead:
-        alive = lambda df: df.filter(~F.col("segment_id").isin([int(x) for x in dead]))
-        ds, td = alive(ds), alive(td)
+        ds, td = (df.filter(segments_in(dead, negate=True)) for df in (ds, td))
     # maxDoc counts every stored version: an updated doc's superseded
     # copy stays in its segment (and in maxDoc) until an expunge drops
     # it, as the NRT fold counts it

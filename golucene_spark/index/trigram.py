@@ -21,8 +21,9 @@ parquet row-group min/max stats — the candidate fetch reads only the
 grams' slices, never the whole dictionary.
 
 Staleness: the manifest record carries the number of data chunks the
-table was built over; MaterializedIndex ignores the table when the live
-chunk count has moved on (a rebuild is one call of build_trigram_index).
+table was built over; MaterializedIndex ignores the table when the
+committed chunk count has moved on (a rebuild is one call of
+build_trigram_index).
 """
 
 from __future__ import annotations
@@ -34,17 +35,28 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .builder import (MaterializedIndex, _arrow_dataset, _list_data_files, commit_record,
+                      data_records, read_manifest, read_table)
+
 TRIGRAM_CHUNK = "trigram"
 
 
-def _data_chunk_count(index_dir: str) -> int:
+def _data_chunk_count(index_dir: str, records: list[dict] | None = None) -> int:
     """Number of committed segment-data manifest records (build chunks,
-    stream/update flushes, merges) — the trigram table's freshness key."""
-    from .builder import read_manifest
+    stream/update flushes, merges) — the trigram table's freshness key
+    (``records``: the manifest already read, else it is read here)."""
+    return len(data_records(read_manifest(index_dir) if records is None else records))
 
-    return sum(1 for rec in read_manifest(index_dir)
-               if rec.get("kind") not in ("delete", "trigram")
-               and rec.get("status") == "committed")
+
+def trigram_files(index_dir: str, records: list[dict]) -> list[str]:
+    """The trigram table's data files when the manifest ``records`` hold
+    a trigram record built over their current data-chunk count, else
+    [] (absent or stale: callers fall back to the full dictionary
+    scan, which is always correct)."""
+    rec = next((r for r in records if r.get("kind") == "trigram"), None)
+    if rec is None or rec.get("built_over_chunks") != _data_chunk_count(index_dir, records):
+        return []
+    return _list_data_files([os.path.join(index_dir, TRIGRAM_CHUNK)])
 
 
 def trigrams_col(term_col="term"):
@@ -59,15 +71,8 @@ def build_trigram_index(spark: SparkSession, index_dir: str) -> dict:
     """(Re)build the trigram side table from the live term dictionary.
     One scan of term_dict + one range shuffle; output sorted by
     (field, gram) for row-group pruning on gram IN-lists."""
-    from .builder import dead_segments
-
     t0 = time.time()
-    td = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(index_dir, "term_dict")
-    )
-    dead = dead_segments(index_dir)
-    if dead:
-        td = td.filter(~F.col("segment_id").isin([int(x) for x in dead]))
+    td = MaterializedIndex(spark, index_dir).term_dict
     terms = td.select("field", "term").distinct()
     tri = (
         terms.select("field", "term", F.explode(trigrams_col()).alias("gram"))
@@ -77,18 +82,13 @@ def build_trigram_index(spark: SparkSession, index_dir: str) -> dict:
     )
     out = os.path.join(index_dir, TRIGRAM_CHUNK)
     tri.write.mode("overwrite").parquet(out)
-    rec = {
+    return commit_record(index_dir, TRIGRAM_CHUNK, {
         "chunk": TRIGRAM_CHUNK,
         "status": "committed",
         "kind": "trigram",
         "built_over_chunks": _data_chunk_count(index_dir),
         "wall_sec": round(time.time() - t0, 3),
-    }
-    mdir = os.path.join(index_dir, "manifest")
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, f"{TRIGRAM_CHUNK}.json"), "w") as f:
-        json.dump(rec, f)
-    return rec
+    })
 
 
 def refresh_trigram_index(spark: SparkSession, index_dir: str,
@@ -127,9 +127,7 @@ def refresh_trigram_index(spark: SparkSession, index_dir: str,
     rec["built_over_chunks"] = cur
     rec["wall_sec"] = round(time.time() - t0, 3)
     rec["kind"] = "trigram"
-    with open(mpath, "w") as f:
-        json.dump(rec, f)
-    return rec
+    return commit_record(index_dir, TRIGRAM_CHUNK, rec)
 
 
 def _append_trigrams(ddir: str, terms) -> None:
@@ -156,21 +154,14 @@ def _append_trigrams(ddir: str, terms) -> None:
     os.replace(tmp, os.path.join(ddir, name))
 
 
-def load_trigram_index(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """The trigram table if present AND fresh (built over the current
-    live chunk set); None otherwise — callers fall back to the full
-    dictionary scan, which is always correct."""
-    mpath = os.path.join(index_dir, "manifest", f"{TRIGRAM_CHUNK}.json")
-    ddir = os.path.join(index_dir, TRIGRAM_CHUNK)
-    if not (os.path.exists(mpath) and os.path.isdir(ddir)):
-        return None
-    with open(mpath) as f:
-        rec = json.load(f)
-    if rec.get("built_over_chunks") != _data_chunk_count(index_dir):
-        return None  # stale: chunks were added/merged since the build
-    from .builder import read_table
-
-    return read_table(spark, ddir)
+def load_trigram_index(spark: SparkSession, index_dir: str,
+                       files: list[str] | None = None) -> DataFrame | None:
+    """The trigram table over ``files`` (default: the ``trigram_files``
+    of the current manifest); None when there are none (absent or
+    stale)."""
+    d = _arrow_dataset(trigram_files(index_dir, read_manifest(index_dir))
+                       if files is None else files)
+    return None if d is None else read_table(spark, os.path.join(index_dir, TRIGRAM_CHUNK), d)
 
 
 def trigram_candidates(trigram: DataFrame, field: str, runs: list[str],

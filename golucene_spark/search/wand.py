@@ -95,7 +95,7 @@ def wand_topk(searcher: Searcher, query, k: int = 10,
     index = searcher.index
     if tqs is None or searcher.sim.name != "bm25" or not hasattr(index, "postings"):
         return searcher.search(q, k)
-    if getattr(index, "_tombstones", None) is not None:
+    if getattr(index, "_tomb_table", None) is not None:
         # the metadata threshold certifies docs that may be tombstoned:
         # a dead max-freq doc would push theta above the true k-th LIVE
         # score and wrongly prune blocks holding live hits — deleted

@@ -34,7 +34,6 @@ field_stats table is written with Arrow on the driver
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import shutil
 import time
@@ -54,6 +53,7 @@ from ..index.builder import (
     _tf_invert,
     blocked_postings,
     blocked_postings_arrow,
+    commit_record,
     doc_stats_arrow,
     read_field_stats,
     read_manifest,
@@ -164,8 +164,7 @@ def _flush_batch(batch_df, epoch_id, index_dir, spec, analyzer="standard",
             "sum_df": int(t.get("df_sum") or 0),
         }
 
-    mdir = os.path.join(index_dir, "manifest")
-    manifest_path = os.path.join(mdir, f"{chunk}.json")
+    manifest_path = os.path.join(index_dir, "manifest", f"{chunk}.json")
     # re-delivered epoch (exactly-once retry): the chunk data was
     # idempotently overwritten above, but its delta may already be folded
     # into field_stats — fall back to a full recompute in that rare case
@@ -190,11 +189,7 @@ def _flush_batch(batch_df, epoch_id, index_dir, spec, analyzer="standard",
         "stats_mode": "incremental" if incremental else "recompute",
         "wall_sec": round(time.time() - t0, 3),
     }
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".{chunk}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, manifest_path)
+    commit_record(index_dir, chunk, rec)
 
     _refresh_field_stats(spark, index_dir, batch_fs, n, omit_norms, full=not incremental)
     # keep the (optional) trigram side table fresh: delta-append this
