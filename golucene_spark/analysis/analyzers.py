@@ -18,7 +18,6 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
 
 from . import wordbreak
 
@@ -51,10 +50,10 @@ class StandardAnalyzer:
         tokens, tok_row, tok_pos, tok_len = wordbreak.segment_batch(texts)
         if not tokens:
             return np.array([], dtype=object), tok_row, tok_pos
+        lower = list(map(str.lower, tokens))
         keep = tok_len <= self.max_token_length
-        ser = pd.Series(tokens, dtype=object).str.lower()
-        keep &= ~ser.isin(self.stop_words).to_numpy()
-        return ser.to_numpy()[keep], tok_row[keep], tok_pos[keep]
+        keep &= ~np.fromiter(map(self.stop_words.__contains__, lower), bool, len(lower))
+        return np.array(lower, dtype=object)[keep], tok_row[keep], tok_pos[keep]
 
 
 class SimpleAnalyzer:

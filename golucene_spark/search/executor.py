@@ -945,7 +945,10 @@ class Searcher:
         (exact or sloppy) or fuzzy query on a MaterializedIndex is
         scored and collected on the driver (search/topk.py, no Spark
         job, nothing put in the plan cache; a fuzzy query expands over
-        the snapshot's term_dict with Arrow); every other query runs
+        the snapshot's term_dict with Arrow) and comes back as a
+        ``topk.LocalHits`` frame, whose collect/count/take/toArrow/
+        toPandas answer in Python and whose JVM relation is built only
+        when another DataFrame method needs it; every other query runs
         ``collect_topk`` in Spark."""
         if isinstance(query, str):
             from .parser import parse_query

@@ -8,7 +8,12 @@ postings_arrays``, tombstones and dead segments applied), scored with
 the similarity's ``score_np``, combined per doc with the boolean rules
 of ``Searcher._boolean_frame``, and cut to the top k in the collector's
 order.  No Catalyst plan is built and no Spark job starts; the hits come
-back as a small local DataFrame.
+back as a ``LocalHits`` frame, a DataFrame that keeps them as the
+kernel's Arrow table: ``collect``, ``count``, ``take``/``head``/
+``first``, ``toArrow``, ``toPandas``, ``schema`` and ``columns`` answer
+from that table with no py4j call, and the JVM relation
+(``spark.createDataFrame(table, RESULT_SCHEMA)``, a LocalRelation) is
+built only when another DataFrame method needs ``_jdf``.
 
 Multi-term nodes (fuzzy, wildcard, regexp, range) are first expanded
 through ``Searcher._resolve``, the snapshot-cache entry the Spark
@@ -37,12 +42,18 @@ whose summed df exceeds DRIVER_MAX_DF keeps the Spark placement,
 
 from __future__ import annotations
 
+from functools import cached_property
+
 import numpy as np
 
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql.classic.dataframe import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .ast import BooleanQuery, PhraseQuery, TermQuery
+from .executor import RESULT_SCHEMA
 
 # largest summed document frequency of a query's terms that the driver
 # answers.  df counts tombstoned docs, so it bounds the posting rows the
@@ -54,17 +65,74 @@ from .ast import BooleanQuery, PhraseQuery, TermQuery
 # with their position blobs read too, the driver still wins at every
 # summed df up to 200,000 on all three index sizes
 # (BENCH/driver_expand_crossover.json); fuzzy expansion wins at every
-# term_dict size there, so it has no cap of its own
+# term_dict size there, so it has no cap of its own.  Both sweeps paid
+# ~24 ms per driver query for a LocalRelation built and collected
+# through py4j, which ``LocalHits`` no longer pays: a re-run of the
+# sweeps will move the crossover up
 DRIVER_MAX_DF = 50_000
+
+# RESULT_SCHEMA in Arrow: both columns non-nullable, as the JVM frame's
+# toArrow() gives them
+ARROW_SCHEMA = to_arrow_schema(RESULT_SCHEMA)
+
+
+class LocalHits(DataFrame):
+    """A top-k result held on the driver as an Arrow table.
+
+    The reference's IndexSearcher.Search hands TopDocs back in process
+    (search.go:95-113); so does this frame.  Its reads (``collect``,
+    ``count``, ``take`` and through it ``head``/``first``, ``toArrow``,
+    ``toPandas``, ``schema`` and through it ``columns``/``dtypes``)
+    answer from ``table`` with no py4j call.  ``_jdf`` is built on first
+    use, as ``spark.createDataFrame(table, RESULT_SCHEMA)``, so every
+    other DataFrame method (``orderBy``, ``join``, ``union``, ``cache``,
+    ``explain``, ``rdd``, ...) runs on that LocalRelation."""
+
+    def __new__(cls, spark, table: pa.Table):
+        return object.__new__(cls)
+
+    def __init__(self, spark, table: pa.Table):
+        # DataFrame.__init__'s fields, without the JVM handle
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self.table = table
+
+    @cached_property
+    def _jdf(self):
+        return self._session.createDataFrame(self.table, RESULT_SCHEMA)._jdf
+
+    @cached_property
+    def schema(self):
+        return StructType.fromJson(RESULT_SCHEMA.jsonValue())  # the caller's own copy
+
+    def collect(self):
+        cols = [self.table.column(f.name).to_pylist() for f in RESULT_SCHEMA]
+        return [RESULT_SCHEMA.fromInternal(v) for v in zip(*cols)]
+
+    def count(self) -> int:
+        return self.table.num_rows
+
+    def take(self, num: int):
+        if num < 0:  # the JVM's limit raises for it
+            return super().take(num)
+        return self.collect()[:num]
+
+    def toArrow(self) -> pa.Table:
+        return self.table
+
+    def toPandas(self):
+        return self.table.to_pandas()
 
 
 def driver_search(searcher, query, k: int):
-    """The top-k DataFrame of ``query`` computed on the driver, or None
-    when the query belongs to the Spark placement (not a
+    """The top-k of ``query`` computed on the driver as a ``LocalHits``
+    frame (empty for a query of the kernel's class without hits), or
+    None when the query belongs to the Spark placement (not a
     MaterializedIndex, outside the kernel's class once expanded, or
     summed df above DRIVER_MAX_DF)."""
     from ..index.builder import MaterializedIndex
-    from .executor import RESULT_SCHEMA, empty_results
 
     if not isinstance(searcher.index, MaterializedIndex):
         return None
@@ -77,11 +145,8 @@ def driver_search(searcher, query, k: int):
     if sum(st.df for st in stats.values()) > DRIVER_MAX_DF:
         return None
     doc, score = _collect(*_Kernel(searcher, q, stats).scores(q), k)
-    spark = searcher.index.spark
-    if not len(doc):
-        return empty_results(spark)
-    # a local relation: planned as a LocalTableScan, collected with no job
-    return spark.createDataFrame(pa.table({"doc_id": doc, "score": score}), RESULT_SCHEMA)
+    return LocalHits(searcher.index.spark,
+                     pa.Table.from_arrays([doc, score], schema=ARROW_SCHEMA))
 
 
 def _in_class(searcher, q) -> bool:

@@ -188,3 +188,34 @@ def test_minus_with_field_scope():
     q = P("-lang:go parse")
     assert q.clauses[0].occur is Occur.MUST_NOT
     assert q.clauses[0].query == TermQuery("lang", "go")
+
+
+def test_standard_analyzer_output_is_pinned():
+    """Lowercase, stop filter and the 255-char cut, with the pre-filter
+    positions: mixed case, non-ASCII (special casings included), stop
+    words of any case and over-long tokens; a bare term is analyzed the
+    same way alone as in a batch."""
+    from golucene_spark.analysis import get_analyzer
+
+    an = get_analyzer("standard")
+    texts = ["The QUICK Brown fox IS not Here",
+             "Ünïcödé ÉCOLE straße İstanbul ΣΊΣΥΦΟΣ",
+             "漢字 and 東京",
+             "A " + "x" * 256 + " To " + "Y" * 255 + " end",
+             "", None, "THE"]
+    terms, rows, pos = an.analyze_batch(texts)
+    assert list(zip(terms.tolist(), rows.tolist(), pos.tolist())) == [
+        ("quick", 0, 1), ("brown", 0, 2), ("fox", 0, 3), ("here", 0, 6),
+        ("ünïcödé", 1, 0), ("école", 1, 1), ("straße", 1, 2),
+        ("i̇stanbul", 1, 3), ("σίσυφος", 1, 4),
+        ("漢", 2, 0), ("字", 2, 1), ("東", 2, 3), ("京", 2, 4),
+        ("y" * 255, 3, 3), ("end", 3, 4),
+    ]
+    assert terms.dtype == object and rows.dtype == pos.dtype == "int64"
+    for text in ("The", "Straße", "AND", "x" * 300):
+        t, r, p = an.analyze_batch([text])
+        assert (t.dtype, r.dtype, p.dtype) == (object, "int64", "int64")
+        assert t.tolist() == ([] if text in ("The", "AND") or len(text) > 255
+                              else [text.lower()])
+    q = P("Foo AND straße AND NOT the")
+    assert [c.query.term for c in q.clauses] == ["foo", "straße"]
